@@ -31,6 +31,7 @@ import os
 import statistics
 import sys
 import time
+import traceback
 import uuid
 
 from my_cudf_spark.queries import load_registry
@@ -352,7 +353,12 @@ def main() -> None:
     # one-line JSON must be the final stdout line with nothing after it —
     # a stray JVM/log line after the JSON made round 10's output
     # unparseable and cost the driver its round-over-round baseline).
-    spark.stop()
+    # A failing teardown is logged, never allowed to swallow that line.
+    try:
+        spark.stop()
+    except Exception:
+        print("# spark.stop() failed:", file=sys.stderr)
+        traceback.print_exc(file=sys.stderr)
     sys.stdout.flush()
     print(json.dumps(result), flush=True)
 

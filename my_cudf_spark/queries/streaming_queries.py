@@ -18,6 +18,7 @@ delay bounds state instead.
 from __future__ import annotations
 
 import shutil
+from contextlib import contextmanager
 from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,25 +32,52 @@ from my_cudf_spark.streaming.stateful import running_totals
 _run_id = count()
 
 
+@contextmanager
+def _drain_envelope(spark: SparkSession, work_dirs: list[str]):
+    """Conf envelope of every bounded drain: one task wave per stateful
+    micro-batch.  A stateful stage runs one state-store load/commit (and,
+    for applyInPandasWithState, one Python task) per shuffle partition
+    EVERY micro-batch, so the partition count is the executor slot count
+    capped at 8 — more partitions than slots only queue a second wave of
+    that per-batch floor, and the cap keeps wide hosts from paying one
+    store per slot (on a real cluster this is sized to state volume, not
+    core count).  The count is fixed per fresh checkpoint, so results do
+    not depend on it.  Bounded replay never restarts from checkpoint
+    mid-run, so only 2 batches of delta files are retained (the default
+    100 only adds maintenance-thread disk work that shows up as cross-run
+    timing jitter).  Both confs are restored and ``work_dirs`` removed on
+    exit, also when the drain raises."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(min(8, spark.sparkContext.defaultParallelism)),
+        "spark.sql.streaming.minBatchesToRetain": "2",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        for wd in work_dirs:
+            shutil.rmtree(wd, ignore_errors=True)
+
+
 def _drain_concurrent(
     specs: list[tuple[DataFrame, str, str]], work_dirs: list[str]
 ) -> list[DataFrame]:
     """Drain several INDEPENDENT bounded streams at once (guide §2.6 —
     actions are only sequential because driver code awaits them
-    sequentially): start every query, then await them all, under the
-    same conf envelope as :func:`_drain`.  A stateful drain is mostly a
-    chain of tiny sequential stages (state-store open/commit, offset
-    logs), so two concurrent drains back-fill each other's idle cores —
-    measured ~1.6× on stream_ann_retrain_replay's epoch-0 index + stats
-    drains, which read the same staged replay and share no state.
-    ``specs``: (stream_df, tag, output_mode) per drain; every dir in
-    ``work_dirs`` is removed after ALL drains finish."""
+    sequentially): start every query, then await them all, under
+    :func:`_drain_envelope`.  A stateful drain is mostly a chain of tiny
+    sequential stages (state-store open/commit, offset logs), so two
+    concurrent drains back-fill each other's idle cores — measured ~1.6×
+    on stream_ann_retrain_replay's epoch-0 index + stats drains, which
+    read the same staged replay and share no state.  ``specs``:
+    (stream_df, tag, output_mode) per drain; every dir in ``work_dirs``
+    is removed after ALL drains finish."""
     spark = specs[0][0].sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    try:
+    with _drain_envelope(spark, work_dirs):
         started = []
         for df, tag, mode in specs:
             name = f"{tag}_{next(_run_id)}"
@@ -61,47 +89,18 @@ def _drain_concurrent(
                 .start()
             )
             started.append((q, name))
-        for q, _ in started:
+        for q, name in started:
             q.awaitTermination()
-        if S.collect_progress:  # measurement hook parity with run_to_memory
-            import json as _json
-
-            for q, name in started:
-                batches = [
-                    p if isinstance(p, dict) else _json.loads(p.json)
-                    for p in q.recentProgress
-                ]
-                S.last_progress.append({"name": name, "batches": batches})
+            S.record_progress(q, name)
         return [spark.table(name) for _, name in started]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        for wd in work_dirs:
-            shutil.rmtree(wd, ignore_errors=True)
 
 
 def _drain(stream_df: DataFrame, tag: str, work_dir: str, output_mode: str | None = None) -> DataFrame:
-    """Run the bounded stream to completion, drop the staging dir, and
-    pin the result rows (the memory sink lives in driver memory).
-
-    Stateful operators pay per-partition state-store overhead EVERY
-    micro-batch (open/commit of 1 store × shuffle partitions × batches), so
-    the replay runs at 8 shuffle partitions instead of the session's 32 —
-    on a real cluster this is sized to state volume, not core count."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # Bounded replay never restarts from checkpoint mid-run — retaining the
-    # default 100 delta files per store only adds maintenance-thread disk
-    # work that shows up as cross-run timing jitter.
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    try:
+    """Run the bounded stream to completion under :func:`_drain_envelope`,
+    drop the staging dir, and return the result rows (the memory sink
+    lives in driver memory)."""
+    with _drain_envelope(stream_df.sparkSession, [work_dir]):
         return S.run_to_memory(stream_df, f"{tag}_{next(_run_id)}", output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        shutil.rmtree(work_dir, ignore_errors=True)
 
 
 @register(

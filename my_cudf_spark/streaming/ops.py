@@ -147,14 +147,18 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
+    record_progress(q, name)
+    return stream_df.sparkSession.table(name)
+
+
+def record_progress(q, name: str) -> None:
+    """Append a finished query's per-micro-batch progress dicts to
+    ``last_progress`` when ``collect_progress`` is on (a no-op otherwise)."""
     if collect_progress:
         import json as _json
 
-        batches = []
-        for p in q.recentProgress:
-            batches.append(p if isinstance(p, dict) else _json.loads(p.json))
+        batches = [p if isinstance(p, dict) else _json.loads(p.json) for p in q.recentProgress]
         last_progress.append({"name": name, "batches": batches})
-    return stream_df.sparkSession.table(name)
 
 
 def _has_aggregate(df: DataFrame) -> bool:

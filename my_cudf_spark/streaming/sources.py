@@ -144,6 +144,14 @@ def replay_documents(
     )
 
 
+def _parquet_files(data_dir: str) -> int:
+    """Number of parquet part files a write left in ``data_dir``."""
+    return sum(
+        f.endswith(".parquet") and not f.startswith(("_", "."))
+        for f in os.listdir(data_dir)
+    )
+
+
 def replay_table(
     spark: SparkSession,
     sf_dir: str,
@@ -211,20 +219,24 @@ def replay_table(
         # be wrong if load_table ever gained a row filter.  Counting the
         # files that actually landed catches both — on mismatch, rewrite
         # via the exact range split.
-        made = [
-            f
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if len(made) != num_chunks:
+        if _parquet_files(data_dir) != num_chunks:
             shutil.rmtree(data_dir)
-            batch.repartitionByRange(num_chunks, chunk_key).write.parquet(
-                data_dir
-            )
-    else:
+            single = False
+    if not single:
         # Real multi-split corpus (cluster scale): keep the range shuffle —
         # chunk boundaries then spread the write instead of serializing it.
         batch.repartitionByRange(num_chunks, chunk_key).write.parquet(data_dir)
+        # The range split writes no file for an empty range, so a replay
+        # with fewer distinct chunk keys (or rows) than chunks still comes
+        # up short: fail loudly instead of proving cross-batch state over
+        # fewer micro-batches than asked for.
+        made = _parquet_files(data_dir)
+        if made != num_chunks:
+            shutil.rmtree(out_dir if work_dir is None else data_dir, ignore_errors=True)
+            raise ValueError(
+                f"replay of {table!r} wrote {made} parquet files, expected "
+                f"num_chunks={num_chunks}"
+            )
     stream = (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

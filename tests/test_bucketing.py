@@ -59,6 +59,28 @@ def test_bucketed_join_is_shuffle_free(warehouse):
         )
 
 
+def _exchanges_over_bucketed_scans(df) -> list[str]:
+    """The nearest Exchange above every ``Bucketed: true`` scan in ``df``'s
+    executed plan tree (one-line node strings; empty when no bucketed scan
+    sits below an Exchange).  The AQE root is a leaf whose plan hangs off
+    ``executedPlan()``, so it is unwrapped before the walk."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    hits, stack = [], [(root, None)]
+    while stack:
+        node, exchange = stack.pop()
+        name = node.nodeName()
+        if "Exchange" in name:
+            exchange = node.simpleString(100)
+        elif exchange and name.startswith("Scan") and "Bucketed: true" in node.toString():
+            hits.append(exchange)
+        ch = node.children()
+        for i in range(ch.size()):
+            stack.append((ch.apply(i), exchange))
+    return hits
+
+
 def test_bucketed_merge_target_side_is_shuffle_free(spark):
     """merge_upsert against a bucketBy-laid-out target with
     null_safe_keys=False: both MERGE legs consume the bucketed scan's
@@ -93,11 +115,10 @@ def test_bucketed_merge_target_side_is_shuffle_free(spark):
         plan = merged._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Bucketed: true") == 2, plan      # both legs' scans
         assert "SortMergeJoin" in plan, plan
-        # every Exchange hashes the source aggregation key — never the
-        # target scan or its key projection
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line:
-                assert "o_custkey" in line, line
+        # no Exchange has a bucketed target scan beneath it: the Exchanges
+        # that remain (one or two, depending on whether the shuffle
+        # partition count equals the bucket count) shuffle the source only
+        assert _exchanges_over_bucketed_scans(merged) == [], plan
         assert "Exchange hashpartitioning(c_custkey" not in plan, plan
         assert "Exchange hashpartitioning(__t_c_custkey" not in plan, plan
         # correctness: identical result to the plain (non-bucketed) merge

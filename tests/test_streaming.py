@@ -2118,3 +2118,55 @@ def test_cell_code_pandas_kernels_bit_equal_expr_forms(spark):
         assert list(r["cc_raw"]["code"]) == list(r["code_expr"]), r["vec_id"]
         assert r["cc_res"]["cell"] == r["cell_expr"], r["vec_id"]
         assert list(r["cc_res"]["code"]) == list(r["rcode_expr"]), r["vec_id"]
+
+
+def test_drain_runs_one_state_wave_and_restores_confs(spark):
+    """The drain envelope sizes every micro-batch's state partitions to
+    min(8, executor slots) — one task wave per stateful stage — and
+    restores the session's shuffle-partition and delta-retention confs
+    afterwards, also when the drained query fails."""
+    from my_cudf_spark.queries.streaming_queries import _drain
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain")
+    saved = {k: spark.conf.get(k) for k in keys}
+    before = {keys[0]: "3", keys[1]: "7"}
+    for k, v in before.items():
+        spark.conf.set(k, v)
+    S.collect_progress = True
+    try:
+        stream, work_dir = replay_events(spark, SF_DIR, num_chunks=2)
+        counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+        out = _drain(counts, "wave_guard", work_dir)
+        assert out.count() > 0
+        assert not os.path.exists(work_dir)
+        (drain,) = S.last_progress
+        assert len(drain["batches"]) == 2
+        want = min(8, spark.sparkContext.defaultParallelism)
+        for b in drain["batches"]:
+            assert b["stateOperators"][0]["numShufflePartitions"] == want, b
+        assert {k: spark.conf.get(k) for k in keys} == before
+
+        stream, work_dir = replay_events(spark, SF_DIR, num_chunks=2)
+        failing = stream.withColumn("boom", F.raise_error(F.lit("wave_guard")))
+        with pytest.raises(Exception, match="wave_guard"):
+            _drain(failing, "wave_guard_fail", work_dir)
+        assert {k: spark.conf.get(k) for k in keys} == before
+        assert not os.path.exists(work_dir)
+    finally:
+        S.collect_progress = False
+        S.last_progress.clear()
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_replay_table_raises_when_chunks_come_up_short(spark):
+    """Fewer replayed rows than chunks cannot make num_chunks files even
+    through the range-split fallback: the replay fails loudly, naming the
+    table and both counts, instead of draining fewer micro-batches."""
+    from my_cudf_spark.streaming.sources import replay_table
+
+    with pytest.raises(ValueError, match=r"'events' wrote 3 parquet files.*num_chunks=4"):
+        replay_table(
+            spark, SF_DIR, "events", "event_id", num_chunks=4,
+            transform=lambda d: d.limit(3),
+        )

@@ -4,7 +4,10 @@ jobs, replay prep, the micro-batch drains) vs POST-DRAIN FOLD (the noop
 execution of the returned batch frame), and break every drain down per
 micro-batch with the StreamingQueryProgress durationMs fields
 (queryPlanning / addBatch / getBatch / walCommit / commitOffsets /
-triggerExecution).
+triggerExecution) and, per stateful operator, its ``stateOperators``
+fields (numShufflePartitions / numStateStoreInstances / commitTimeMs /
+allUpdatesTimeMs) — more state partitions than executor slots shows up
+as a second task wave in commitTimeMs.
 
 Usage:
   python tools_stream_profile.py stream_ann_ivfpq_residual_replay [...names]
@@ -37,6 +40,13 @@ DUR_KEYS = [
     "addBatch",
     "walCommit",
     "commitOffsets",
+]
+
+STATE_KEYS = [
+    "numShufflePartitions",
+    "numStateStoreInstances",
+    "commitTimeMs",
+    "allUpdatesTimeMs",
 ]
 
 
@@ -79,8 +89,11 @@ def main() -> None:
                         "n_batches": len(d["batches"]),
                         "per_batch_ms": [
                             {
-                                k: b.get("durationMs", {}).get(k)
-                                for k in DUR_KEYS
+                                **{k: b.get("durationMs", {}).get(k) for k in DUR_KEYS},
+                                "stateOperators": [
+                                    {k: op.get(k) for k in STATE_KEYS}
+                                    for op in b.get("stateOperators", [])
+                                ],
                             }
                             for b in d["batches"]
                         ],
@@ -106,9 +119,15 @@ def main() -> None:
             )
             plan = sum((b.get("queryPlanning") or 0) for b in d["per_batch_ms"])
             add = sum((b.get("addBatch") or 0) for b in d["per_batch_ms"])
+            commit = sum(
+                op.get("commitTimeMs") or 0
+                for b in d["per_batch_ms"]
+                for op in b["stateOperators"]
+            )
             print(
                 f"   drain {d['drain']}: {d['n_batches']} batches, "
-                f"trigger={tot}ms plan={plan}ms addBatch={add}ms",
+                f"trigger={tot}ms plan={plan}ms addBatch={add}ms "
+                f"stateCommit={commit}ms",
                 file=sys.stderr,
             )
     print(json.dumps(out, indent=1))
