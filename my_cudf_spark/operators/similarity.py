@@ -870,9 +870,15 @@ def _make_cov_partials(mu_list: list, dim: int):
             Xc = X - mu_np
             for s in range(0, Xc.shape[0], step):
                 blk = Xc[s : s + step]
-                terms = np.floor(
-                    (blk[:, :, None] * blk[:, None, :]) * 1e9 + 0.5
-                ).astype(np.int64)
+                scaled = np.floor((blk[:, :, None] * blk[:, None, :]) * 1e9 + 0.5)
+                # a single term at 2^63 would wrap in the int64 cast itself,
+                # before any flush could help — fail loudly instead
+                if np.abs(scaled).max(initial=0.0) >= 2.0**63:
+                    raise ValueError(
+                        "power_iteration_pca: a centered outer-product term "
+                        "overflows int64 nano-units (|x_i*x_j|*1e9 >= 2^63)"
+                    )
+                terms = scaled.astype(np.int64)
                 mx = int(np.abs(terms).max(initial=1))
                 rows_ok = max(1, int(LIM // max(mx, 1)))
                 for c0 in range(0, terms.shape[0], rows_ok):

@@ -157,16 +157,14 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-user
-    (count, sum) state updated each micro-batch, update-mode emissions; the
-    final state per key equals the batch aggregate.  Float note: the state
-    accumulates chunk sums in replay order vs the oracle's single pass —
-    ROUND(_, 4) absorbs the last-ulp difference."""
+    """Stateful running totals (``stateful.running_totals``): per-user
+    (count, sum) in Spark's native streaming-aggregation state, updated
+    each micro-batch, update-mode emissions; the final state per key
+    equals the batch aggregate.  Float note: the state accumulates chunk
+    sums in replay order vs the oracle's single pass — ROUND(_, 4) absorbs
+    the last-ulp difference."""
     stream, work_dir = replay_events(spark, sf_dir, num_chunks=4)
-    # buckets=64: one vectorized state update per bucket per micro-batch
-    # instead of one Python call per user (the high-cardinality lever,
-    # same pattern as stream_cdc_replay)
-    totals = running_totals(stream, ["user_id"], "value", buckets=64)
+    totals = running_totals(stream, ["user_id"], "value")
     updates = _drain(totals, "running", work_dir, output_mode="update")
     return (
         updates.groupBy("user_id")
@@ -511,8 +509,8 @@ def stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC compaction (stateful.latest_state — the stream twin
     of operators/cdc.apply_changelog): the synthetic per-customer balance
     changelog of cdc_apply_changelog replayed as 4 micro-batches; per-key
-    state is ONE (seq, op, value) tuple — max-seq wins across batch
-    boundaries, arrival-order independent — and the final snapshot carries
+    state is ONE native max_by buffer over (seq, op) — max-seq wins across
+    batch boundaries, arrival-order independent — and the final snapshot carries
     tombstones as ``is_deleted`` so a downstream MERGE sink
     (cdc.merge_upsert, delete_col="is_deleted") can apply upserts and
     deletes alike.  State O(distinct keys), same bound as streaming
@@ -529,12 +527,8 @@ def stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderkey") % 97 == 0, "D").otherwise("U").alias("op"),
         F.col("o_totalprice").alias("bal"),
     )
-    # buckets=64: state keyed on hash(cust)%64 → 64 vectorized Python
-    # invocations per micro-batch instead of one per customer (~15k at
-    # sf0.1 — the per-key path's invocation overhead dominated wall-clock
-    # 5× and is dead at real key cardinalities)
     updates = _drain(
-        latest_state(ch, ["cust"], "seq", "op", ["bal"], buckets=64),
+        latest_state(ch, ["cust"], "seq", "op", ["bal"]),
         "cdc",
         work_dir,
         output_mode="update",
@@ -578,7 +572,7 @@ def stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END streaming lakehouse apply: the orders changelog replayed
-    as micro-batches → bucketed keep-latest compaction
+    as micro-batches → native keep-latest compaction
     (stateful.latest_state) → final snapshot MERGEd into the ``customer``
     dimension (cdc.merge_upsert, tombstones as deletes) — the
     stream-ingest-to-governed-table shape every CDC pipeline ends in,
@@ -600,7 +594,7 @@ def stream_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("bal"),
     )
     updates = _drain(
-        latest_state(ch, ["cust"], "seq", "op", ["bal"], buckets=64),
+        latest_state(ch, ["cust"], "seq", "op", ["bal"]),
         "cdcm",
         work_dir,
         output_mode="update",
@@ -1574,7 +1568,7 @@ def stream_ivm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas = stream.select(
         F.col("o_custkey").alias("cust"), F.explode(ev).alias("e")
     ).select("cust", F.col("e.ds").alias("ds"), F.col("e.dn").alias("dn"))
-    snaps = incremental_agg_totals(deltas, "cust", "ds", "dn", buckets=8)
+    snaps = incremental_agg_totals(deltas, "cust", "ds", "dn")
     updates = _drain(snaps, "ivm", work_dir, output_mode="update")
     final = updates.groupBy("key").agg(
         F.max_by("total", "version").alias("total_cents"),
@@ -2343,7 +2337,7 @@ def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cdc.scd2_asof reproduces any point-in-time dimension read
     (tests/test_streaming_scd2.py).  State O(events per key) = the SCD2
     history itself; one vectorized pandas fold per bucket per batch
-    (buckets=64, the latest_state lever)."""
+    (buckets=64)."""
     from pyspark.sql import Window
 
     from my_cudf_spark.streaming.scd2 import scd2_history

@@ -239,8 +239,8 @@ def _quantile_digest_bucketed(
             arrays = state.get
             # Restored Arrow arrays round-trip through pandas: an Int key
             # array holding None coerces to float64 (1 -> 1.0) unless
-            # re-normalized to the Spark-derived nullable dtype — same
-            # discipline as _latest_state_bucketed's restore path.
+            # re-normalized to the Spark-derived nullable dtype (see
+            # stateful._norm_nullable).
             cent = _norm_nullable(
                 pd.DataFrame(
                     {

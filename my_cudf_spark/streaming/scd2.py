@@ -33,9 +33,10 @@ the identical table and the batch SQL fold is the oracle verbatim.
 
 Scale: state is O(change events per key) — the SCD2 history itself,
 i.e. the artifact the operator exists to retain; nothing corpus-sized.
-``buckets`` keys the state store on ``hash(keys) % buckets`` (the
-latest_state lever) so each micro-batch pays one vectorized pandas fold
-per bucket, not one Python invocation per dimension key.  Emission
+``buckets`` keys the state store on ``hash(keys) % buckets`` so each
+micro-batch pays one vectorized pandas fold per bucket, not one Python
+invocation per dimension key (a version history is not an aggregate, so
+unlike ``latest_state`` it cannot ride native aggregation state).  Emission
 volume is touched-history per batch — bounded by batches × history; a
 production deployment with an in-order feed would emit closed/opened
 version deltas instead, but snapshot emission is what makes the drained
@@ -117,7 +118,7 @@ def scd2_history(
         + ", is_current boolean, n_events long"
     )
     # state = the bucket's full event set as parallel arrays (positional
-    # names, the _latest_state_bucketed convention)
+    # names: column identity is the `cols` order, immune to collisions)
     state_schema = ", ".join(f"c{i} array<{typ[c]}>" for i, c in enumerate(cols))
 
     def _null_safe_eq(a: pd.Series, b: pd.Series) -> pd.Series:

@@ -1,18 +1,26 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Stateful streaming operators.
 
 The reference has no stateful streaming machinery at all (SURVEY.md §2.12);
 this is the Spark-native surface a user would reach for where the reference
 would have hand-rolled a consumer loop over ``Consumer.read_gdf`` batches
-(``/root/reference/python/custreamz/custreamz/kafka.py:82-176``).
+(``custreamz/kafka.py``).
 
-``running_totals`` keeps per-key (count, sum) state across micro-batches and
-emits the updated totals each batch — the streaming analogue of
-``groupBy(keys).agg(count, sum)``, with O(distinct keys) state.  On batch
-frames it falls back to exactly that aggregation, so the same call works in
-both modes and the batch result is the oracle for the stream's final state.
+Aggregate-shaped state rides Spark's built-in streaming aggregation in
+update mode — one ``UnsafeRow`` per key in the native state store, partial
+aggregation map-side, no Python worker:
+
+- ``running_totals``: per-key ``groupBy(keys).agg(count, sum)``;
+- ``latest_state``: per-key keep-latest as ``max_by`` over ``(seq, op)``;
+- ``incremental_agg_totals``: per-key ``sum``/``sum``/``count`` of CDC
+  deltas.
+
+Each emits the keys a micro-batch touched with their cumulative value, and
+the identical plan on a batch frame is the oracle for the stream's final
+state (``latest_state`` keeps its ``row_number`` batch twin).
 
 ``heavy_hitters`` is a per-key streaming top-k frequency sketch
-(Space-Saving summary, Metwally et al. 2005): bounded state of
+(Space-Saving summary, Metwally et al. 2005) — state no SQL aggregate
+expresses, so it keeps ``applyInPandasWithState``: bounded state of
 ``capacity`` (item, count, error) counters per key, merged batch-at-a-time
 — the ``count_min``/top-k shape a 100 TB event pipeline keeps per entity
 where exact per-item counts would be unbounded state.  When ``capacity``
@@ -39,7 +47,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # fail to encode state arrays typed array<bigint>.  Normalizing BOTH
 # frames to the pandas nullable dtype derived from the SPARK type keeps
 # merge/groupby keys comparable and NULL keys representable — the bucketed
-# paths then accept the same input domain as the per-key paths.
+# paths (here and in quantiles, reservoir, scd2) then accept the same
+# input domain as the per-key paths.
 _PD_NULLABLE = {
     "tinyint": "Int8",
     "smallint": "Int16",
@@ -71,48 +80,19 @@ def running_totals(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    buckets: int | None = None,
 ) -> DataFrame:
-    """Per-key running (n_events, sum_value), updated each micro-batch.
+    """Per-key running (n_events, sum_value): ``groupBy(keys).agg(count,
+    sum)`` on batch and streaming frames alike.  Streaming, it is Spark's
+    native aggregation state (update mode emits each touched key's
+    cumulative totals per micro-batch), so the batch result is the oracle
+    for the stream's final state.
 
-    ``buckets``: key the state store on ``hash(keys) % buckets`` instead
-    of the raw key — one vectorized Python invocation per bucket per
-    batch instead of one per key (the high-cardinality lever; see
-    latest_state).  Same output and oracle."""
-    keys = list(keys)
-    if not df.isStreaming:
-        return df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
-        )
-    if buckets is not None:
-        return _running_totals_bucketed(df, keys, value_col, buckets)
-
-    key_fields = ", ".join(f"{k} {df.schema[k].dataType.simpleString()}" for k in keys)
-    out_schema = f"{key_fields}, n_events bigint, sum_value double"
-    state_schema = "n bigint, s double"
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            vals = pdf[value_col].dropna()
-            n += len(pdf)
-            s += float(vals.sum()) if len(vals) else 0.0
-        state.update((n, s))
-        yield pd.DataFrame(
-            [dict(zip(keys, key)) | {"n_events": n, "sum_value": s}]
-        )
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    SQL semantics in both modes: ``n_events`` counts every row, NULL
+    values included; ``sum_value`` skips NULLs and is NULL for a key whose
+    values are all NULL; a NULL key is its own group."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(value_col).alias("sum_value"),
     )
 
 
@@ -282,7 +262,6 @@ def latest_state(
     op_col: str,
     value_cols: Sequence[str],
     delete_op: str = "D",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Streaming CDC compaction — the stream twin of
     :func:`my_cudf_spark.operators.cdc.apply_changelog`: per-key state is
@@ -294,19 +273,14 @@ def latest_state(
     and tombstones alike.  Arrival-order independent by construction —
     max-seq wins whatever the micro-batch boundaries.
 
+    Streaming: ``max_by(struct(seq, op, *values), struct(seq, op))`` per
+    key — Spark's native aggregation state, one row per key, partial
+    aggregation map-side.  A NULL seq or op orders below every value, as
+    in the twin's ``desc`` (nulls last); a NULL key is its own group.
+
     Batch frames take the exact keep-latest row_number twin with the SAME
     output schema (keys, seq, is_deleted, values) — the oracle for the
-    stream's final snapshot.
-
-    Scale: state is one tuple per key — O(distinct keys), the same bound
-    as streaming dedup; the per-batch shuffle carries raw change rows
-    once.  ``buckets`` is the high-cardinality lever: keying the state
-    store on ``hash(keys) % buckets`` instead of the raw key collapses
-    one Python invocation PER KEY per batch (dead at 10⁸ keys) into one
-    per bucket, with a vectorized pandas keep-latest over the bucket's
-    concatenated state+batch frame — size buckets so a bucket's distinct
-    keys fit an Arrow batch comfortably (10³-10⁵ rows).  Same output,
-    same oracle; the sf0.1 fixture drops ~5× wall-clock at buckets=64."""
+    stream's final snapshot."""
     keys = list(keys)
     value_cols = list(value_cols)
     if not df.isStreaming:
@@ -324,201 +298,15 @@ def latest_state(
             )
         )
 
-    if buckets is not None:
-        return _latest_state_bucketed(
-            df, keys, seq_col, op_col, value_cols, delete_op, buckets
-        )
-
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_fields = ", ".join(f"{k} {typ[k]}" for k in keys)
-    val_fields = ", ".join(f"{c} {typ[c]}" for c in value_cols)
-    out_schema = f"{key_fields}, {seq_col} {typ[seq_col]}, is_deleted boolean"
-    state_schema = f"seq {typ[seq_col]}, op {typ[op_col]}"
-    if value_cols:
-        out_schema += f", {val_fields}"
-        state_schema += f", {val_fields}"
-
-    def _native(v):
-        return v.item() if hasattr(v, "item") else v
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            top = pdf.sort_values([seq_col, op_col], ascending=False).iloc[0]
-            cand = tuple(
-                _native(top[c]) for c in [seq_col, op_col, *value_cols]
-            )
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        state.update(best)
-        yield pd.DataFrame(
-            [
-                dict(zip(keys, key))
-                | {seq_col: best[0], "is_deleted": best[1] == delete_op}
-                | dict(zip(value_cols, best[2:]))
-            ]
-        )
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _latest_state_bucketed(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    op_col: str,
-    value_cols: list[str],
-    delete_op: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed keep-latest: state keyed on hash(keys) % buckets, one
-    vectorized pandas reduction per bucket per batch (see latest_state)."""
-    if buckets < 1:
-        raise ValueError("buckets must be positive")
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    cols = [*keys, seq_col, op_col, *value_cols]
-    key_fields = ", ".join(f"{k} {typ[k]}" for k in keys)
-    out_schema = f"{key_fields}, {seq_col} {typ[seq_col]}, is_deleted boolean"
-    if value_cols:
-        out_schema += ", " + ", ".join(f"{c} {typ[c]}" for c in value_cols)
-    # state = the bucket's current best rows as parallel arrays (positional
-    # names: column identity is the `cols` order, immune to collisions)
-    state_schema = ", ".join(f"c{i} array<{typ[c]}>" for i, c in enumerate(cols))
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        col_types = {c: typ[c] for c in cols}
-        frames = []
-        if state.exists:
-            arrays = state.get
-            frames.append(
-                _norm_nullable(
-                    pd.DataFrame({c: arrays[i] for i, c in enumerate(cols)}),
-                    col_types,
-                )
-            )
-        batch = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=[*keys, seq_col, "is_deleted", *value_cols])
-            return
-        batch_pdf = _norm_nullable(
-            pd.concat(batch, ignore_index=True), col_types
-        )
-        frames.append(batch_pdf)
-        allf = pd.concat(frames, ignore_index=True)
-        best = (
-            allf.sort_values([seq_col, op_col], ascending=False, kind="mergesort")
-            .drop_duplicates(keys, keep="first")
-        )
-        state.update(tuple(_plain_list(best[c]) for c in cols))
-        touched = batch_pdf[keys].drop_duplicates()
-        out = best.merge(touched, on=keys)
-        out["is_deleted"] = out[op_col] == delete_op
-        yield out[[*keys, seq_col, "is_deleted", *value_cols]]
-
-    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets))
-    return (
-        df.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _running_totals_bucketed(
-    df: DataFrame, keys: list[str], value_col: str, buckets: int
-) -> DataFrame:
-    """Bucketed running totals: state = the bucket's per-key (n, s) rows
-    as parallel arrays; one vectorized pandas reduce per bucket."""
-    if buckets < 1:
-        raise ValueError("buckets must be positive")
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_fields = ", ".join(f"{k} {typ[k]}" for k in keys)
-    out_schema = f"{key_fields}, n_events bigint, sum_value double"
-    state_schema = (
-        ", ".join(f"k{i} array<{typ[k]}>" for i, k in enumerate(keys))
-        + ", n array<bigint>, s array<double>"
-    )
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        key_types = {k: typ[k] for k in keys}
-        if state.exists:
-            arrays = state.get
-            cur = _norm_nullable(
-                pd.DataFrame(
-                    {
-                        **{k: arrays[i] for i, k in enumerate(keys)},
-                        "n_events": arrays[len(keys)],
-                        "sum_value": arrays[len(keys) + 1],
-                    }
-                ),
-                key_types,
-            )
-        else:
-            cur = pd.DataFrame(columns=[*keys, "n_events", "sum_value"])
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=[*keys, "n_events", "sum_value"])
-            return
-        b = _norm_nullable(pd.concat(batch, ignore_index=True), key_types)
-        delta = (
-            b.groupby(keys, dropna=False)[value_col]
-            .agg(n_events="size", sum_value=lambda v: float(v.dropna().sum()))
-            .reset_index()
-        )
-        merged = (
-            pd.concat([cur, delta], ignore_index=True)
-            .groupby(keys, dropna=False)[["n_events", "sum_value"]]
-            .sum()
-            .reset_index()
-        )
-        merged = _norm_nullable(merged, key_types)
-        state.update(
-            tuple(
-                _plain_list(merged[c])
-                for c in [*keys, "n_events", "sum_value"]
-            )
-        )
-        touched = delta[keys].drop_duplicates()
-        out = merged.merge(touched, on=keys)
-        out["n_events"] = out["n_events"].astype("int64")
-        yield out[[*keys, "n_events", "sum_value"]]
-
-    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets))
-    return (
-        df.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # positional field names: a value column may share a name with seq/op
+    cols = [seq_col, op_col, *value_cols]
+    row = F.struct(*[F.col(c).alias(f"c{i}") for i, c in enumerate(cols)])
+    best = F.max_by(row, F.struct(seq_col, op_col)).alias("__best")
+    return df.groupBy(*keys).agg(best).select(
+        *keys,
+        F.col("__best.c0").alias(seq_col),
+        (F.col("__best.c1") == delete_op).alias("is_deleted"),
+        *[F.col(f"__best.c{i}").alias(c) for i, c in enumerate(cols) if i > 1],
     )
 
 
@@ -638,7 +426,6 @@ def incremental_agg_totals(
     key_col: str,
     dsum_col: str,
     dn_col: str,
-    buckets: int = 8,
 ) -> DataFrame:
     """Streaming incremental materialized-view maintenance — the stream
     twin of :func:`my_cudf_spark.operators.cdc.incremental_agg`: per-key
@@ -649,70 +436,18 @@ def incremental_agg_totals(
     independent — the batch view-maintenance identity holds on the
     stream.
 
-    State is bucketed (hash(key) % buckets → parallel arrays): one
-    Arrow round-trip per bucket per batch; state volume is O(distinct
-    keys).  Emits the cumulative ``(key, total, n, version)`` per key a
-    batch touches; version (delta rows seen for the key) is strictly
-    monotone, so the final snapshot is the max-version row per key.
+    ``groupBy(key).agg(sum(ds), sum(dn), count(*))``: on a stream, Spark's
+    native aggregation state, one row per key.  Emits the cumulative
+    ``(key, total, n, version)`` per key a batch touches; version (delta
+    rows seen for the key) is strictly monotone, so the final snapshot is
+    the max-version row per key.
 
-    The key keeps its INPUT type — the output ``key`` column and the
-    state array are declared from ``df.schema[key_col]`` (string /
-    decimal / integral keys all work; the former long-only coercion
-    failed at runtime on non-integral keys)."""
-    ktype = df.schema[key_col].dataType.simpleString()
-    rows = df.select(
-        F.col(key_col).alias("__k"),
-        F.col(dsum_col).cast("long").alias("__ds"),
-        F.col(dn_col).cast("long").alias("__dn"),
-    ).withColumn("__bkt", F.pmod(F.hash("__k"), F.lit(buckets)))
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            ks, tot, n, ver = (list(a) for a in state.get)
-            acc = {k: [t, c, v] for k, t, c, v in zip(ks, tot, n, ver)}
-        else:
-            acc = {}
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["key", "total", "n", "version"])
-            return
-        new = pd.concat(batch, ignore_index=True)
-        g = new.groupby("__k").agg(
-            ds=("__ds", "sum"), dn=("__dn", "sum"), rows=("__k", "size")
-        )
-        out = []
-        for k, r in g.iterrows():
-            # keep the key's native type (numpy scalars → Python natives
-            # for the Arrow state round-trip; strings/decimals pass through)
-            k = k.item() if hasattr(k, "item") else k
-            e = acc.setdefault(k, [0, 0, 0])
-            e[0] += int(r["ds"])
-            e[1] += int(r["dn"])
-            e[2] += int(r["rows"])
-            out.append((k, e[0], e[1], e[2]))
-        state.update(
-            (
-                list(acc.keys()),
-                [e[0] for e in acc.values()],
-                [e[1] for e in acc.values()],
-                [e[2] for e in acc.values()],
-            )
-        )
-        yield pd.DataFrame(out, columns=["key", "total", "n", "version"])
-
-    return rows.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=f"key {ktype}, total long, n long, version long",
-        stateStructType=(
-            f"ks array<{ktype}>, tot array<long>, ns array<long>,"
-            " vers array<long>"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    SQL semantics: a NULL key is its own group; NULL deltas are skipped,
+    and a key whose deltas are all NULL has a NULL ``total``/``n``.  The
+    key keeps its INPUT type (string / decimal / integral keys all
+    work)."""
+    return df.groupBy(F.col(key_col).alias("key")).agg(
+        F.sum(F.col(dsum_col).cast("long")).alias("total"),
+        F.sum(F.col(dn_col).cast("long")).alias("n"),
+        F.count(F.lit(1)).alias("version"),
     )

@@ -625,6 +625,22 @@ def test_cov_partials_overflow_flush_exact():
             assert totals[(i, j)] == expect, (i, j)
 
 
+def test_cov_partials_rejects_term_overflowing_int64():
+    """A centered magnitude of ~1e5 makes one nano-unit term ~1e19 >= 2^63:
+    the kernel must raise before the int64 cast wraps it."""
+    import pyarrow as pa
+    import pytest
+
+    dim = 2
+    fn = S._make_cov_partials([0.0] * dim, dim)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([[1.0e5, 1.0], [2.0, 3.0]], type=pa.list_(pa.float64()))],
+        names=["__v"],
+    )
+    with pytest.raises(ValueError, match="overflows int64"):
+        list(fn(iter([batch])))
+
+
 def test_cov_partials_rejects_null_and_ragged():
     """r11 ADVICE: the slow (non-contiguous) path must fail loudly on
     null/ragged vectors instead of crashing in np.asarray or silently

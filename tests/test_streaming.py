@@ -234,15 +234,15 @@ def test_heavy_hitters_bucketed_stream_equals_batch(spark):
         shutil.rmtree(work_dir, ignore_errors=True)
 
 
-def test_running_totals_bucketed_stream_equals_batch(spark):
+def test_running_totals_stream_equals_batch(spark):
     from pyspark.sql import Window
 
     from my_cudf_spark.streaming.stateful import running_totals
 
     stream, work_dir = replay_events(spark, SF_DIR, num_chunks=4)
     try:
-        totals = running_totals(stream, ["user_id"], "value", buckets=8)
-        drained = S.run_to_memory(totals, "rt_bkt_eq", output_mode="update")
+        totals = running_totals(stream, ["user_id"], "value")
+        drained = S.run_to_memory(totals, "rt_eq", output_mode="update")
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
         final = (
             drained.withColumn("__rn", F.row_number().over(w))
@@ -391,24 +391,6 @@ def test_latest_state_stream_equals_batch(spark):
             (2, 2, True, None),
             (3, 7, False, 70.0),
         ]
-        # bucketed mode (the high-cardinality path): same final snapshot,
-        # including keys that collide into one bucket
-        stream2 = (
-            spark.readStream.schema("k long, seq long, op string, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(work_dir)
-        )
-        drained2 = S.run_to_memory(
-            latest_state(stream2, ["k"], "seq", "op", ["v"], buckets=2),
-            "cdc_eq_b",
-            output_mode="update",
-        )
-        final2 = (
-            drained2.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        assert _rows(final2, "k") == _rows(batch, "k")
     finally:
         shutil.rmtree(work_dir, ignore_errors=True)
 
@@ -477,13 +459,24 @@ def _write_chunks(work_dir, schema: "pa.Schema", chunks):
         os.utime(fp, (now + i, now + i))
 
 
-def test_bucketed_state_null_keys(spark):
-    """NULL key values must flow through the BUCKETED state paths exactly
-    as through the per-key paths (r5 advice: Arrow→pandas turns nullable
-    int64 keys into float dtype, which used to break the state merge) —
-    the bucketed flag must not narrow the supported input domain."""
+def _replay_chunks(spark, ddl: str, schema: "pa.Schema", chunks):
+    """Stream ``chunks`` one file per micro-batch; returns (stream, dir)."""
     import tempfile
 
+    work_dir = tempfile.mkdtemp(prefix="chunks_stream_")
+    _write_chunks(work_dir, schema, chunks)
+    stream = (
+        spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(work_dir)
+    )
+    return stream, work_dir
+
+
+def test_bucketed_state_null_keys(spark):
+    """NULL key values must flow through every state path — the BUCKETED
+    Python paths (Arrow→pandas turns nullable int64 keys into float dtype,
+    which used to break the state merge) and the native aggregation state
+    of latest_state / running_totals — as their own group, equal to the
+    batch twin."""
     import pyarrow as pa
     from pyspark.sql import Window
 
@@ -511,20 +504,15 @@ def test_bucketed_state_null_keys(spark):
     )
 
     def _replay():
-        work_dir = tempfile.mkdtemp(prefix="nullkey_stream_")
-        _write_chunks(work_dir, schema, chunks)
-        stream = (
-            spark.readStream.schema("k long, seq long, op string, v double, item string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(work_dir)
+        return _replay_chunks(
+            spark, "k long, seq long, op string, v double, item string", schema, chunks
         )
-        return stream, work_dir
 
     # latest_state: NULL key keeps its own max-seq state (tombstone at 9)
     stream, wd = _replay()
     try:
         drained = S.run_to_memory(
-            latest_state(stream, ["k"], "seq", "op", ["v"], buckets=2),
+            latest_state(stream, ["k"], "seq", "op", ["v"]),
             "nullkey_cdc", output_mode="update",
         )
         w = Window.partitionBy("k").orderBy(F.desc("seq"))
@@ -542,7 +530,7 @@ def test_bucketed_state_null_keys(spark):
     stream, wd = _replay()
     try:
         drained = S.run_to_memory(
-            running_totals(stream, ["k"], "v", buckets=2),
+            running_totals(stream, ["k"], "v"),
             "nullkey_rt", output_mode="update",
         )
         w = Window.partitionBy("k").orderBy(F.desc("n_events"))
@@ -1655,7 +1643,7 @@ def test_incremental_agg_totals_string_keys(spark):
     stream, work_dir = replay_table(
         spark, SF_DIR, "events", "event_id", num_chunks=2, transform=tf
     )
-    out = incremental_agg_totals(stream, "k", "ds", "dn", buckets=2)
+    out = incremental_agg_totals(stream, "k", "ds", "dn")
     try:
         upd = S.run_to_memory(out, "ivmstr", "update").cache()
         upd.count()
@@ -1680,6 +1668,89 @@ def test_incremental_agg_totals_string_keys(spark):
     assert set(final) == set(batch)
     for k, c in batch.items():
         assert final[k] == (c, c)
+
+
+def test_running_totals_all_null_values_sum_is_null(spark):
+    """A key whose values are all NULL streams ``sum_value`` NULL, as the
+    batch twin and SQL SUM give — never a silent 0.0."""
+    import pyarrow as pa
+
+    from my_cudf_spark.streaming.stateful import running_totals
+
+    schema = pa.schema([("k", pa.int64()), ("v", pa.float64())])
+    stream, work_dir = _replay_chunks(
+        spark, "k long, v double", schema, [{"k": [1], "v": [None]}] * 2
+    )
+    try:
+        drained = S.run_to_memory(
+            running_totals(stream, ["k"], "v"), "rt_allnull", output_mode="update"
+        )
+        final = max((tuple(r) for r in drained.collect()), key=lambda r: r[1])
+    finally:
+        shutil.rmtree(work_dir, ignore_errors=True)
+    batch_df = spark.createDataFrame([(1, None), (1, None)], "k long, v double")
+    assert [tuple(r) for r in running_totals(batch_df, ["k"], "v").collect()] == [
+        (1, 2, None)
+    ]
+    assert final == (1, 2, None)
+
+
+def test_incremental_agg_totals_null_key_is_own_group(spark):
+    """Delta rows with a NULL key fold into their own group, as SQL GROUP
+    BY does — never silently dropped."""
+    import pyarrow as pa
+
+    from my_cudf_spark.streaming.stateful import incremental_agg_totals
+
+    schema = pa.schema([("k", pa.int64()), ("ds", pa.int64()), ("dn", pa.int64())])
+    chunks = [
+        {"k": [1, None], "ds": [10, 5], "dn": [1, 1]},
+        {"k": [None, 1], "ds": [7, -10], "dn": [1, -1]},
+    ]
+    stream, work_dir = _replay_chunks(spark, "k long, ds long, dn long", schema, chunks)
+    try:
+        upd = S.run_to_memory(
+            incremental_agg_totals(stream, "k", "ds", "dn"), "ivm_nullkey", "update"
+        )
+        final = {
+            r["key"]: (r["total"], r["n"], r["version"])
+            for r in upd.groupBy("key")
+            .agg(*[F.max_by(c, "version").alias(c) for c in ("total", "n", "version")])
+            .collect()
+        }
+    finally:
+        shutil.rmtree(work_dir, ignore_errors=True)
+    assert final == {None: (12, 2, 2), 1: (0, 0, 2)}
+    batch_df = spark.createDataFrame(
+        [(1, 10, 1), (None, 5, 1), (None, 7, 1), (1, -10, -1)],
+        "k long, ds long, dn long",
+    )
+    batch = incremental_agg_totals(batch_df, "k", "ds", "dn").collect()
+    assert {r["key"]: (r["total"], r["n"], r["version"]) for r in batch} == final
+
+
+def test_aggregate_shaped_state_is_native_aggregation(spark, tmp_path):
+    """keep-latest, running totals and IVM deltas keep their stream state
+    in Spark's native aggregation, not in a Python state operator."""
+    from my_cudf_spark.streaming.stateful import (
+        incremental_agg_totals,
+        latest_state,
+        running_totals,
+    )
+
+    stream = spark.readStream.schema("k long, seq long, op string, v double").parquet(
+        str(tmp_path)
+    )
+    frames = {
+        "latest_state": latest_state(stream, ["k"], "seq", "op", ["v"]),
+        "running_totals": running_totals(stream, ["k"], "v"),
+        "incremental_agg_totals": incremental_agg_totals(stream, "k", "seq", "seq"),
+    }
+    for name, df in frames.items():
+        assert df.isStreaming, name
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "Aggregate" in plan, name
+        assert "FlatMapGroupsInPandasWithState" not in plan, name
 
 
 def test_stream_ann_index_chunking_invariant_matches_batch(spark):

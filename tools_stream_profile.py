@@ -5,9 +5,12 @@ execution of the returned batch frame), and break every drain down per
 micro-batch with the StreamingQueryProgress durationMs fields
 (queryPlanning / addBatch / getBatch / walCommit / commitOffsets /
 triggerExecution) and, per stateful operator, its ``stateOperators``
-fields (numShufflePartitions / numStateStoreInstances / commitTimeMs /
-allUpdatesTimeMs) — more state partitions than executor slots shows up
-as a second task wave in commitTimeMs.
+fields (operatorName / numRowsTotal / memoryUsedBytes /
+numShufflePartitions / numStateStoreInstances / commitTimeMs /
+allUpdatesTimeMs) — operatorName tells native aggregation state
+(``stateStoreSave``) from Python state (``applyInPandasWithState``), and
+more state partitions than executor slots shows up as a second task wave
+in commitTimeMs.
 
 Usage:
   python tools_stream_profile.py stream_ann_ivfpq_residual_replay [...names]
@@ -43,6 +46,9 @@ DUR_KEYS = [
 ]
 
 STATE_KEYS = [
+    "operatorName",
+    "numRowsTotal",
+    "memoryUsedBytes",
     "numShufflePartitions",
     "numStateStoreInstances",
     "commitTimeMs",
@@ -130,6 +136,14 @@ def main() -> None:
                 f"stateCommit={commit}ms",
                 file=sys.stderr,
             )
+            for i, b in enumerate(d["per_batch_ms"]):
+                for op in b["stateOperators"]:
+                    print(
+                        f"     batch {i} {op.get('operatorName')}: "
+                        f"rows={op.get('numRowsTotal')} "
+                        f"mem={op.get('memoryUsedBytes')}B",
+                        file=sys.stderr,
+                    )
     print(json.dumps(out, indent=1))
     spark.stop()
 
