@@ -349,13 +349,11 @@ def events_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch leg of ``streaming.stateful2.type_counts`` — the Spark-4
-    ``transformWithStateInPandas`` operator's degenerate mode (a batch
-    frame yields the groupBy count the MapState accumulates to on a
-    stream).  Registered so the module's batch contract carries driver
-    evidence; the streaming leg stays protobuf-gated
-    (stateful2.py env gate, same policy as Avro/Kafka)."""
-    from my_cudf_spark.streaming.stateful2 import type_counts
+    """Batch leg of ``streaming.stateful.type_counts``: the same
+    ``groupBy(user, type).count`` plan that, on a stream, keeps the
+    running counts in Spark's native aggregation state — so this result is
+    also what a drained stream's final counts equal."""
+    from my_cudf_spark.streaming.stateful import type_counts
 
     ev = load_table(spark, sf_dir, "events")
     return (

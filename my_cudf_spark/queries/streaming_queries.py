@@ -228,30 +228,6 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-4 ``transformWithStateInPandas`` (typed MapState) — per-user
-    per-event-type running counts carried across micro-batches; the final
-    update per (user, type) equals the batch groupBy count.  Counting is
-    order-insensitive, which the replay harness requires (chunks are
-    event_id ranges, so per-user arrival order is not time-monotonic).
-
-    NOT registered for the driver: the transformWithState Python runner
-    speaks protobuf to its state server and ``google.protobuf`` is absent
-    from this environment (no installs) — the operator is package-gated
-    exactly like Avro/Kafka and covered by an env-guarded test
-    (tests/test_streaming.py) plus the batch-fallback oracle check."""
-    from my_cudf_spark.streaming.stateful2 import type_counts
-
-    stream, work_dir = replay_events(spark, sf_dir, num_chunks=4)
-    counts = type_counts(stream, ["user_id"], "event_type")
-    updates = _drain(counts, "typecounts", work_dir, output_mode="update")
-    return (
-        updates.groupBy("user_id", "event_type")
-        .agg(F.max("n").alias("n"))
-        .orderBy("user_id", "event_type")
-    )
-
-
 @register(
     "stream_sketch_replay",
     sql="""
@@ -453,30 +429,28 @@ def stream_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-user top-3 event types via the Space-Saving summary
-    (streaming/stateful.heavy_hitters): bounded O(keys × capacity) sketch
+    """Streaming per-user top-3 event types via the frequent-items sketch
+    (streaming/stateful.heavy_hitters, Spark's native
+    ``approx_top_k_accumulate`` state): bounded O(keys × capacity) sketch
     state across micro-batches — the per-entity frequency shape an
     unbounded stream cannot answer with exact per-item state.  capacity=16
-    covers the fixture's distinct event types, so the summary is exact and
+    covers the fixture's distinct event types, so the sketch is exact and
     the batch groupBy + rank twin is a bit-exact oracle (the suite's
     convention for probabilistic operators: exact-by-construction on
-    fixtures, documented error bound at scale).  The final snapshot per
-    user is the emitted update carrying that user's maximal n_seen."""
+    fixtures, documented error bound at scale); the tie order (count desc,
+    event_type asc) comes from the operator's ranking, not the oracle.  The
+    final snapshot per user is the emitted update carrying that user's
+    maximal n_seen."""
     from pyspark.sql import Window
 
     from my_cudf_spark.streaming.stateful import heavy_hitters
 
     stream, work_dir = replay_events(spark, sf_dir, num_chunks=4)
-    # buckets=64: per-bucket vectorized Space-Saving merges (per-key merge
-    # order unchanged → summary still deterministic)
-    tops = heavy_hitters(
-        stream, ["user_id"], "event_type", k=3, capacity=16, buckets=64
-    )
+    tops = heavy_hitters(stream, ["user_id"], "event_type", k=3, capacity=16)
     updates = _drain(tops, "topk", work_dir, output_mode="update")
     # Latest snapshot per (user, rank) via row_number, NOT n_seen == max:
-    # two updates can tie on n_seen (e.g. a later micro-batch whose rows
-    # for a user are all NULL event_type re-emits the unchanged summary),
-    # and an equality filter would keep both.
+    # an equality filter keeps every row that ties on n_seen, and
+    # row_number keeps exactly one per rank.
     w = Window.partitionBy("user_id", "rank").orderBy(
         F.desc("n_seen"), F.desc("n"), F.asc("event_type")
     )
@@ -632,30 +606,26 @@ def stream_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_quantile_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming approximate quantiles (streaming/quantiles.quantile_digest
-    — the stream twin of agg_approx_quantile; tdigest role per
+    """Streaming approximate quantiles in native ``percentile_approx`` state
+    (streaming/quantiles.quantile_digest — the stream twin of
+    agg_approx_quantile, one shared plan; tdigest role per
     cpp/include/cudf/quantiles.hpp:130, cpp/include/cudf/tdigest/): a
-    mergeable t-digest per event_type carried in bucketed
-    applyInPandasWithState state across micro-batches, emitting updated
-    p50/p90 estimates each batch — the latency/size-percentile-dashboard
-    shape an unbounded stream cannot answer with exact state.  State is
-    O(keys × delta) regardless of stream length.  Checked by the suite's
-    approx contract (never hash-compare an estimate): the driver-compared
-    columns are the EXACT quantiles plus flags that each streamed estimate
-    lies inside a ±0.02 rank window around its target — orders of
-    magnitude wider than the digest's observed rank error (~1e-4 at
-    delta=300) and spanning many inter-point gaps at every fixture SF."""
+    mergeable quantile summary per event_type in Spark's native
+    aggregation state across micro-batches, emitting updated p50/p90
+    estimates each batch — the latency/size-percentile-dashboard shape an
+    unbounded stream cannot answer with exact state.  Checked by the
+    suite's approx contract (never hash-compare an estimate): the
+    driver-compared columns are the EXACT quantiles plus flags that each
+    streamed estimate lies inside a ±0.02 rank window around its target —
+    two orders of magnitude wider than the summary's 1e-4 rank-error bound
+    and spanning many inter-point gaps at every fixture SF."""
     from pyspark.sql import Window
 
     from my_cudf_spark.sources import load_table as _lt
     from my_cudf_spark.streaming.quantiles import quantile_digest
 
     stream, work_dir = replay_events(spark, sf_dir, num_chunks=4)
-    # buckets=8: one vectorized digest-merge invocation per bucket per
-    # micro-batch (the r5 high-cardinality lever, bucketed from day one)
-    digs = quantile_digest(
-        stream, ["event_type"], "value", qs=[0.5, 0.9], delta=300, buckets=8
-    )
+    digs = quantile_digest(stream, ["event_type"], "value", qs=[0.5, 0.9])
     updates = _drain(digs, "qdig", work_dir, output_mode="update")
     # final snapshot per key = the update carrying the maximal n_seen
     # (row_number, not an equality filter — ties must keep one row)

@@ -78,45 +78,6 @@ def test_wordpiece_ids_reconstruct_or_unk(word, vocab_words):
     assert rebuilt == word
 
 
-@given(
-    st.lists(
-        st.tuples(st.text(alphabet="abcdef", min_size=1, max_size=3),
-                  st.integers(min_value=1, max_value=50)),
-        min_size=0, max_size=30,
-    ),
-    st.integers(min_value=1, max_value=6),
-)
-@settings(max_examples=200)
-def test_space_saving_invariants(batches, capacity):
-    """Space-Saving summary invariants under arbitrary batch merges:
-    bounded size, count overestimates true frequency by at most the
-    recorded error, and exactness whenever capacity was never exceeded."""
-    from collections import Counter
-
-    from my_cudf_spark.streaming.stateful import _space_saving_merge
-
-    summary: dict[str, list[int]] = {}
-    true = Counter()
-    overflowed = False
-    # feed in chunks of 5 pairs as "micro-batches"
-    for i in range(0, len(batches), 5):
-        batch: dict[str, int] = {}
-        for it, n in batches[i : i + 5]:
-            batch[it] = batch.get(it, 0) + n
-            true[it] += n
-        if len(set(summary) | set(batch)) > capacity:
-            overflowed = True
-        _space_saving_merge(summary, batch, capacity)
-    assert len(summary) <= capacity
-    for it, (cnt, err) in summary.items():
-        assert cnt >= true[it]            # never undercounts a kept item
-        assert cnt - err <= true[it]      # overestimate bounded by error
-    if not overflowed:
-        for it, (cnt, err) in summary.items():
-            assert (cnt, err) == (true[it], 0)
-        assert set(summary) == set(true)
-
-
 @given(st.integers(min_value=1, max_value=500), st.integers(min_value=1, max_value=20))
 @settings(max_examples=300)
 def test_ntile_closed_form_matches_sql_semantics(n, k):

@@ -71,52 +71,31 @@ def test_sliding_window_stream_equals_batch(spark):
         shutil.rmtree(work_dir, ignore_errors=True)
 
 
-def test_transform_with_state_contract(spark):
-    """transformWithStateInPandas gate: batch fallback must equal the
-    groupBy oracle everywhere; the streaming path needs google.protobuf
-    (absent here — no installs) and must fail fast with the install hint,
-    not crash downstream in the state-server runner.  With protobuf
-    present the streamed final counts equal the batch answer (covered by
-    the stream_type_counts query + oracle, runnable wherever protobuf
-    exists)."""
-    from my_cudf_spark.streaming.sources import replay_events
-    from my_cudf_spark.streaming.stateful2 import type_counts
+def test_type_counts_stream_equals_batch(spark):
+    """type_counts keeps its per-(user, type) counts in Spark's native
+    aggregation state: after a 2-chunk replay the final (max) n per pair
+    equals the batch groupBy count."""
+    from my_cudf_spark.streaming.stateful import type_counts
 
     batch = _batch_events(spark)
-    got = {
-        (r["user_id"], r["event_type"]): r["n"]
-        for r in type_counts(batch, ["user_id"], "event_type").collect()
-    }
     want = {
         (r["user_id"], r["event_type"]): r["count"]
         for r in batch.groupBy("user_id", "event_type").count().collect()
     }
-    assert got == want
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
     stream, work_dir = replay_events(spark, SF_DIR, num_chunks=2)
     try:
-        if has_protobuf:
-            out = S.run_to_memory(
-                type_counts(stream, ["user_id"], "event_type"), "twscontract", "update"
-            )
-            final = {
-                (r["user_id"], r["event_type"]): r["n"]
-                for r in out.groupBy("user_id", "event_type")
-                .agg(F.max("n").alias("n"))
-                .collect()
-            }
-            assert final == want
-        else:
-            with pytest.raises(NotImplementedError, match="protobuf"):
-                type_counts(stream, ["user_id"], "event_type")
+        out = S.run_to_memory(
+            type_counts(stream, ["user_id"], "event_type"), "tc_eq", "update"
+        )
+        final = {
+            (r["user_id"], r["event_type"]): r["n"]
+            for r in out.groupBy("user_id", "event_type")
+            .agg(F.max("n").alias("n"))
+            .collect()
+        }
     finally:
         shutil.rmtree(work_dir, ignore_errors=True)
+    assert final == want
 
 
 def test_kafka_stream_contract(spark):
@@ -159,28 +138,10 @@ def test_kafka_live_roundtrip(spark):
     assert vals == sorted(f'{{"k":{i}}}' for i in range(10))
 
 
-def test_space_saving_merge_logic():
-    """Pure sketch-merge unit (no Spark): exact under capacity, classic
-    min-eviction + error inheritance over capacity, deterministic order."""
-    from my_cudf_spark.streaming.stateful import _space_saving_merge
-
-    s: dict[str, list[int]] = {}
-    _space_saving_merge(s, {"a": 5, "b": 3}, capacity=2)
-    assert s == {"a": [5, 0], "b": [3, 0]}
-    # 'c' evicts the min ('b',3): count = 3+4, err = 3
-    _space_saving_merge(s, {"c": 4, "a": 1}, capacity=2)
-    assert s == {"a": [6, 0], "c": [7, 3]}
-    # overestimate bound: count <= true + err always holds
-    # (c true=4, count=7, err=3)
-    # deterministic tie-break: equal-count victims evict lexicographically
-    s2 = {"x": [2, 0], "y": [2, 0]}
-    _space_saving_merge(s2, {"z": 1}, capacity=2)
-    assert s2 == {"y": [2, 0], "z": [3, 2]}
-
-
 def test_heavy_hitters_stream_equals_batch(spark):
-    """Space-Saving final snapshot == exact batch twin when capacity covers
-    the distinct items (fixture: ~6 event types, capacity 16)."""
+    """Frequent-items sketch final snapshot == exact batch twin when
+    capacity covers the distinct items (fixture: ~6 event types, capacity
+    16)."""
     from pyspark.sql import Window
 
     from my_cudf_spark.streaming.stateful import heavy_hitters
@@ -194,36 +155,6 @@ def test_heavy_hitters_stream_equals_batch(spark):
             drained.withColumn("__mx", F.max("n_seen").over(w))
             .filter(F.col("n_seen") == F.col("__mx"))
             .drop("__mx")
-        )
-        batch = heavy_hitters(
-            _batch_events(spark), ["user_id"], "event_type", k=3, capacity=16
-        )
-        order = ["user_id", "rank"]
-        assert _rows(final, order) == _rows(batch, order)
-    finally:
-        shutil.rmtree(work_dir, ignore_errors=True)
-
-
-def test_heavy_hitters_bucketed_stream_equals_batch(spark):
-    """The bucketed (high-cardinality) state path converges to the same
-    final snapshot as the per-key path and the batch twin."""
-    from pyspark.sql import Window
-
-    from my_cudf_spark.streaming.stateful import heavy_hitters
-
-    stream, work_dir = replay_events(spark, SF_DIR, num_chunks=4)
-    try:
-        tops = heavy_hitters(
-            stream, ["user_id"], "event_type", k=3, capacity=16, buckets=8
-        )
-        drained = S.run_to_memory(tops, "hh_bkt_eq", output_mode="update")
-        w = Window.partitionBy("user_id", "rank").orderBy(
-            F.desc("n_seen"), F.desc("n"), F.asc("event_type")
-        )
-        final = (
-            drained.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
         )
         batch = heavy_hitters(
             _batch_events(spark), ["user_id"], "event_type", k=3, capacity=16
@@ -258,12 +189,14 @@ def test_running_totals_stream_equals_batch(spark):
 
 
 def test_heavy_hitters_native_item_dtype_and_null_batch(spark):
-    """Two contracts beyond the fixture query: (a) a non-string item
+    """Three contracts beyond the fixture query: (a) a non-string item
     column keeps its NATIVE dtype through streaming state and output
     (schema == batch twin's), (b) a key whose FIRST micro-batch holds only
-    NULL items yields a typed empty update instead of a zero-column frame
-    the Arrow serializer rejects — and still converges to the batch answer
-    once real items arrive."""
+    NULL items still converges to the batch answer once real items arrive,
+    (c) a key that sees exactly ``capacity`` distinct items across the
+    micro-batches gets exact counts — the premise the stream_topk_replay
+    oracle relies on — with the count tie (items 3 and 4) broken by item
+    ascending."""
     import tempfile
     import time
 
@@ -277,7 +210,7 @@ def test_heavy_hitters_native_item_dtype_and_null_batch(spark):
     try:
         chunks = [
             {"user_id": ["u1", "u1", "u1", "u2", "u2"], "item": [1, 1, 2, None, None]},
-            {"user_id": ["u1", "u1", "u2"], "item": [2, 3, 7]},
+            {"user_id": ["u1", "u1", "u1", "u2"], "item": [2, 3, 4, 7]},
         ]
         now = time.time()
         for i, c in enumerate(chunks):
@@ -311,7 +244,7 @@ def test_heavy_hitters_native_item_dtype_and_null_batch(spark):
         )
         batch_rows = [
             ("u1", 1), ("u1", 1), ("u1", 2), ("u2", None), ("u2", None),
-            ("u1", 2), ("u1", 3), ("u2", 7),
+            ("u1", 2), ("u1", 3), ("u1", 4), ("u2", 7),
         ]
         batch = heavy_hitters(
             spark.createDataFrame(batch_rows, "user_id string, item bigint"),
@@ -322,6 +255,10 @@ def test_heavy_hitters_native_item_dtype_and_null_batch(spark):
         )
         order = ["user_id", "rank"]
         assert _rows(final, order) == _rows(batch, order)
+        assert _rows(final, order) == [
+            ("u1", 1, 1, 2, 6), ("u1", 2, 2, 2, 6), ("u1", 3, 3, 1, 6),
+            ("u2", 1, 7, 1, 1),
+        ]
     finally:
         shutil.rmtree(work_dir, ignore_errors=True)
 
@@ -402,58 +339,16 @@ def test_heavy_hitters_validates_args(spark):
         heavy_hitters(_batch_events(spark), ["user_id"], "event_type", k=5, capacity=3)
 
 
-def test_type_count_processor_logic_with_fake_handle():
-    """Exercise the transformWithStateInPandas processor's own logic with
-    a dict-backed fake of the MapState handle — the state-server protocol
-    is protobuf-gated in this sandbox, the per-key accumulation logic is
-    not."""
-    import pandas as pd
-
-    from my_cudf_spark.streaming.stateful2 import _TypeCountProcessor
-
-    class FakeMap:
-        def __init__(self):
-            self.d = {}
-        def containsKey(self, k):
-            return k in self.d
-        def getValue(self, k):
-            return self.d[k]
-        def updateValue(self, k, v):
-            self.d[k] = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.m = FakeMap()
-        def getMapState(self, name, ks, vs):
-            return self.m
-
-    p = _TypeCountProcessor(["user_id"], "event_type")
-    h = FakeHandle()
-    p.init(h)
-    out1 = list(p.handleInputRows(
-        (7,), iter([pd.DataFrame({"event_type": ["a", "a", "b"]})]), None
-    ))
-    got1 = {(r.user_id, r.event_type): r.n for r in out1[0].itertuples()}
-    assert got1 == {(7, "a"): 2, (7, "b"): 1}
-    # second micro-batch accumulates into MapState
-    out2 = list(p.handleInputRows(
-        (7,), iter([pd.DataFrame({"event_type": ["b", "c"]})]), None
-    ))
-    got2 = {(r.user_id, r.event_type): r.n for r in out2[0].itertuples()}
-    assert got2 == {(7, "b"): 2, (7, "c"): 1}
-    assert h.m.d == {("a",): (2,), ("b",): (2,), ("c",): (1,)}
-
-
-def _write_chunks(work_dir, schema: "pa.Schema", chunks):
-    """Write each chunk dict as one parquet file with ascending mtimes so
-    maxFilesPerTrigger=1 replays them in order."""
+def _write_chunks(work_dir, schema: "pa.Schema", chunks, first: int = 0):
+    """Write each chunk dict as one parquet file (numbered from ``first``)
+    with ascending mtimes so maxFilesPerTrigger=1 replays them in order."""
     import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     now = time.time()
-    for i, c in enumerate(chunks):
+    for i, c in enumerate(chunks, first):
         fp = os.path.join(work_dir, f"chunk{i}.parquet")
         pq.write_table(pa.table(c, schema=schema), fp)
         os.utime(fp, (now + i, now + i))
@@ -472,11 +367,9 @@ def _replay_chunks(spark, ddl: str, schema: "pa.Schema", chunks):
 
 
 def test_bucketed_state_null_keys(spark):
-    """NULL key values must flow through every state path — the BUCKETED
-    Python paths (Arrow→pandas turns nullable int64 keys into float dtype,
-    which used to break the state merge) and the native aggregation state
-    of latest_state / running_totals — as their own group, equal to the
-    batch twin."""
+    """NULL key values must flow through the native aggregation state of
+    latest_state / running_totals / heavy_hitters / quantile_digest as
+    their own group, equal to the batch twin."""
     import pyarrow as pa
     from pyspark.sql import Window
 
@@ -544,11 +437,11 @@ def test_bucketed_state_null_keys(spark):
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
-    # heavy_hitters: NULL key carries its own Space-Saving summary
+    # heavy_hitters: NULL key carries its own frequent-items sketch
     stream, wd = _replay()
     try:
         drained = S.run_to_memory(
-            heavy_hitters(stream, ["k"], "item", k=2, capacity=8, buckets=2),
+            heavy_hitters(stream, ["k"], "item", k=2, capacity=8),
             "nullkey_hh", output_mode="update",
         )
         w = Window.partitionBy("k", "rank").orderBy(
@@ -564,16 +457,14 @@ def test_bucketed_state_null_keys(spark):
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
-    # quantile_digest: NULL key keeps its own digest across batches (the
-    # restored-state key arrays are re-normalized — r6 advice: without
-    # _norm_nullable the Arrow→pandas restore coerced Int64-with-None to
-    # float64, so cross-batch merge relied on accidental 1.0 == 1 hashing)
+    # quantile_digest: NULL key keeps its own quantile summary across
+    # batches
     from my_cudf_spark.streaming.quantiles import quantile_digest
 
     stream, wd = _replay()
     try:
         drained = S.run_to_memory(
-            quantile_digest(stream, ["k"], "v", qs=[0.5], buckets=2),
+            quantile_digest(stream, ["k"], "v", qs=[0.5]),
             "nullkey_qd", output_mode="update",
         )
         w = Window.partitionBy("k").orderBy(F.desc("n_seen"))
@@ -583,89 +474,36 @@ def test_bucketed_state_null_keys(spark):
         )
         batch = quantile_digest(batch_df, ["k"], "v", qs=[0.5])
         assert _rows(final, "k") == _rows(batch, "k")
-        # few points/key → t-digest is exact: both keys span two batches,
-        # so a dropped cross-batch merge would show n_seen == 1
-        assert _rows(final, "k") == [(None, 2, 6.0), (1, 2, 20.0)]
+        # both keys span two batches, so a dropped cross-batch merge would
+        # show n_seen == 1; percentile_approx returns a data point, so the
+        # median of two points is the lower one
+        assert _rows(final, "k") == [(None, 2, 5.0), (1, 2, 10.0)]
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_tdigest_core_properties():
-    """Digest core (no Spark): bounded size, deterministic, rank error far
-    under the ±0.02 contract window whatever the chunking."""
-    import numpy as np
-
-    from my_cudf_spark.streaming.quantiles import _compress, _estimate
-
-    rng = np.random.RandomState(11)
-    vals = rng.lognormal(2.0, 1.5, size=50000)
-    sv = np.sort(vals)
-
-    def stream_digest(chunks):
-        m = w = np.empty(0)
-        for c in chunks:
-            m, w = _compress(
-                np.concatenate([m, c]), np.concatenate([w, np.ones(c.size)]), 300.0
-            )
-        return m, w
-
-    for n_chunks in (1, 4, 13):
-        m, w = stream_digest(np.array_split(vals, n_chunks))
-        assert len(m) <= 300  # bounded by ~delta/2 + slack
-        assert w.sum() == len(vals)
-        for q in (0.05, 0.5, 0.9, 0.99):
-            est = _estimate(m, w, [q])[0]
-            rank = np.searchsorted(sv, est) / len(sv)
-            assert abs(rank - q) < 0.01, (n_chunks, q, rank)
-    # determinism: same chunking → identical centroids
-    m1, w1 = stream_digest(np.array_split(vals, 4))
-    m2, w2 = stream_digest(np.array_split(vals, 4))
-    assert np.array_equal(m1, m2) and np.array_equal(w1, w2)
-
-
-def test_quantile_digest_stream_bucketed_equals_per_key(spark):
-    """Per-key and bucketed streaming digests see identical per-key merge
-    sequences ON THE SAME staged chunks, so their final snapshots are
-    bit-identical (chunk boundaries themselves vary per replay —
-    repartitionByRange samples per run — which the digest is sensitive to
-    by design, hence one shared staging dir); the batch twin (exact
-    percentile) brackets both within the rank contract."""
-    import os as _os
-
+def test_quantile_digest_stream_within_rank_window(spark):
+    """The streamed final snapshot counts every non-null value (n_seen ==
+    the batch twin's) and each estimate lies inside the ±0.02 exact
+    ``percentile`` rank window — the stream_quantile_replay contract."""
     from pyspark.sql import Window
 
     from my_cudf_spark.streaming.quantiles import quantile_digest
 
-    stream0, work_dir = replay_events(spark, SF_DIR, num_chunks=4)
-    data_dir = _os.path.join(work_dir, "data")
-
-    def final_snapshot(stream, buckets):
-        digs = quantile_digest(
-            stream, ["event_type"], "value", qs=[0.5, 0.9], buckets=buckets
-        )
-        drained = S.run_to_memory(digs, f"qdig_eq_{buckets}", output_mode="update")
+    stream, work_dir = replay_events(spark, SF_DIR, num_chunks=4)
+    try:
+        digs = quantile_digest(stream, ["event_type"], "value", qs=[0.5, 0.9])
+        drained = S.run_to_memory(digs, "qdig_win", output_mode="update")
         w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-        return (
+        final = _rows(
             drained.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .drop("__rn")
+            .drop("__rn"),
+            ["event_type"],
         )
-
-    try:
-        stream1 = (
-            spark.readStream.schema(stream0.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        per_key = _rows(final_snapshot(stream0, None), ["event_type"])
-        bucketed = _rows(final_snapshot(stream1, 4), ["event_type"])
     finally:
         shutil.rmtree(work_dir, ignore_errors=True)
-    assert per_key == bucketed
-    # batch twin: same schema, exact values; estimates within ±0.02 rank
-    from my_cudf_spark.streaming.quantiles import quantile_digest as qd
-
-    batch = qd(_batch_events(spark), ["event_type"], "value", qs=[0.5, 0.9])
+    batch = quantile_digest(_batch_events(spark), ["event_type"], "value", qs=[0.5, 0.9])
     exact = {r[0]: r for r in batch.collect()}
     eps_q = (
         _batch_events(spark)
@@ -674,7 +512,8 @@ def test_quantile_digest_stream_bucketed_equals_per_key(spark):
         .agg(F.expr("percentile(value, array(0.48D, 0.52D, 0.88D, 0.92D))").alias("b"))
     )
     bracket = {r[0]: r[1] for r in eps_q.collect()}
-    for et, n_seen, q50, q90 in per_key:
+    assert {r[0] for r in final} == set(exact)
+    for et, n_seen, q50, q90 in final:
         assert n_seen == exact[et]["n_seen"]
         lo50, hi50, lo90, hi90 = bracket[et]
         assert lo50 <= q50 <= hi50
@@ -1730,12 +1569,16 @@ def test_incremental_agg_totals_null_key_is_own_group(spark):
 
 
 def test_aggregate_shaped_state_is_native_aggregation(spark, tmp_path):
-    """keep-latest, running totals and IVM deltas keep their stream state
-    in Spark's native aggregation, not in a Python state operator."""
+    """keep-latest, running totals, IVM deltas, type counts and the top-k
+    and quantile sketches keep their stream state in Spark's native
+    aggregation, not in a Python state operator."""
+    from my_cudf_spark.streaming.quantiles import quantile_digest
     from my_cudf_spark.streaming.stateful import (
+        heavy_hitters,
         incremental_agg_totals,
         latest_state,
         running_totals,
+        type_counts,
     )
 
     stream = spark.readStream.schema("k long, seq long, op string, v double").parquet(
@@ -1745,12 +1588,79 @@ def test_aggregate_shaped_state_is_native_aggregation(spark, tmp_path):
         "latest_state": latest_state(stream, ["k"], "seq", "op", ["v"]),
         "running_totals": running_totals(stream, ["k"], "v"),
         "incremental_agg_totals": incremental_agg_totals(stream, "k", "seq", "seq"),
+        "heavy_hitters": heavy_hitters(stream, ["k"], "op", k=2, capacity=4),
+        "quantile_digest": quantile_digest(stream, ["k"], "v", qs=[0.5]),
+        "type_counts": type_counts(stream, ["k"], "op"),
     }
     for name, df in frames.items():
         assert df.isStreaming, name
         plan = df._jdf.queryExecution().analyzed().toString()
         assert "Aggregate" in plan, name
         assert "FlatMapGroupsInPandasWithState" not in plan, name
+        assert "TransformWithStateInPandas" not in plan, name
+
+
+@pytest.mark.parametrize("op", ["heavy_hitters", "quantile_digest"])
+def test_sketch_state_survives_restart(spark, tmp_path, op):
+    """Drain 2 of 4 chunks with a durable checkpoint, stop, add the other
+    2 chunks and restart: the final per-key snapshot equals the batch
+    answer, and the state store holds exactly one row per key."""
+    import pyarrow as pa
+
+    from my_cudf_spark.streaming.quantiles import quantile_digest
+    from my_cudf_spark.streaming.stateful import heavy_hitters
+
+    def build(df):
+        if op == "heavy_hitters":
+            return heavy_hitters(df, ["k"], "item", k=3, capacity=8)
+        return quantile_digest(df, ["k"], "v", qs=[0.5, 0.9])
+
+    rows = [(i % 5, "abcdef"[(i * i) % 6], float((i * 37) % 101)) for i in range(200)]
+    schema = pa.schema([("k", pa.int64()), ("item", pa.string()), ("v", pa.float64())])
+    chunks = [
+        dict(zip(schema.names, map(list, zip(*rows[i : i + 50]))))
+        for i in range(0, 200, 50)
+    ]
+    data_dir, ckpt = tmp_path / "data", str(tmp_path / "ckpt")
+    data_dir.mkdir()
+
+    latest: dict = {}
+    batch_ids: list[int] = []
+
+    def sink(bdf, batch_id):
+        batch_ids.append(batch_id)
+        touched: dict = {}
+        for r in bdf.collect():
+            touched.setdefault(r["k"], []).append(tuple(r))
+        latest.update(touched)
+
+    def drain():
+        stream = (
+            spark.readStream.schema("k long, item string, v double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(data_dir))
+        )
+        q = (
+            build(stream)
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(sink)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    _write_chunks(str(data_dir), schema, chunks[:2])
+    drain()
+    assert batch_ids == [0, 1]
+    _write_chunks(str(data_dir), schema, chunks[2:], first=2)
+    drain()
+    assert batch_ids == [0, 1, 2, 3]
+
+    final = sorted(r for key_rows in latest.values() for r in key_rows)
+    batch = build(spark.createDataFrame(rows, "k long, item string, v double"))
+    assert final == sorted(tuple(r) for r in batch.collect())
+    assert spark.read.format("statestore").load(ckpt).count() == 5
 
 
 def test_stream_ann_index_chunking_invariant_matches_batch(spark):
