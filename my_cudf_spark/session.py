@@ -10,6 +10,15 @@ matter for plan quality at 100 TB:
 - Arrow for any pandas interchange (UDF and toPandas paths).
 - A broadcast threshold sized for dimension tables (region/nation/supplier/
   part/customer at typical star-schema ratios).
+- A generated-code cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``).  Whole-stage codegen is the engine's
+  run-time compiler; Spark keeps the compiled classes in a cache keyed by
+  the generated source, bounded at 100 entries by default.  One pass of
+  the iterative driver-built queries (classifier GD, k-means, BPE, dedup
+  clusters) generates ~285 distinct classes, so under the default every
+  repeated pass recompiled ~280 of them at 5-15 ms each.  Keep values that
+  change per iteration in frames, not literals: a literal changes the
+  generated source, so it misses the cache however large it is.
 """
 
 from __future__ import annotations
@@ -36,6 +45,16 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
 
+# Bound of Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100).  Measured working sets (local[4]): one pass of the iterative
+# driver-built queries generates ~285 classes at sf0.01, one pass of the
+# stateful streams ~81; in a bench sweep (sf0.001) no single query needs
+# more than 113.  The cache evicts per segment (Guava ``maximumSize``), so
+# the bound is approximate; 1000 leaves over 3x headroom on the largest
+# set.  The conf is static: it only takes effect on the builder, and a
+# session handed to us by a driver keeps its own value.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 # Sessions already configured by apply_runtime_confs, keyed by JVM session
 # identity: load_table re-applies the profile defensively on EVERY call
@@ -48,21 +67,27 @@ import weakref
 _CONFIGURED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
-# One profile conf re-read per memoized call (single py4j round trip vs the
-# full ~10-set pass): if an external driver mutated the profile between
-# queries, the cheap sentinel check notices and the full pass re-applies.
-# Repo-internal temporary overrides (the streaming drain) touch only confs
-# OUTSIDE this profile and restore themselves in ``finally``.
-_SENTINEL_CONF = "spark.sql.session.timeZone"
+# The plan-affecting profile confs re-read per memoized call (three py4j
+# round trips vs the full ~10-set pass): if an external driver mutated one
+# of them between queries, the sentinel check notices and the full pass
+# re-applies.  Repo-internal temporary overrides (the streaming drain's
+# shuffle partitions) touch only confs OUTSIDE this profile and restore
+# themselves in ``finally``.
+_SENTINEL_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+)
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Best-effort apply of runtime-settable confs to an existing session
-    (idempotent and memoized per live session object; a one-conf sentinel
-    read detects external mutation and triggers a full re-apply)."""
+    (idempotent and memoized per live session object; a sentinel read of
+    the plan-affecting confs detects external mutation and triggers a full
+    re-apply)."""
     if spark in _CONFIGURED_SESSIONS:
         try:
-            if spark.conf.get(_SENTINEL_CONF) == RUNTIME_CONFS[_SENTINEL_CONF]:
+            if all(spark.conf.get(k) == RUNTIME_CONFS[k] for k in _SENTINEL_CONFS):
                 return spark
         except Exception:
             return spark
@@ -86,7 +111,16 @@ def get_spark(app_name: str = "my_cudf_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     return apply_runtime_confs(builder.getOrCreate())
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes compiled by Spark's code generator so far in this JVM (every
+    generated-code cache miss compiles one); a delta around a piece of work
+    is its compile count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

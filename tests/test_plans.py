@@ -688,3 +688,50 @@ def test_token_budget_single_corpus_agg(spark):
     per-source frame, and no cartesian enters the plan."""
     rep = P.plan_report(_df(spark, "sample_token_budget"))
     assert not rep["cartesian"], rep
+
+
+def test_repeat_pass_reuses_generated_code(spark):
+    """A second pass of the iterative driver-built queries (classifier GD,
+    k-means) finds its generated classes in Spark's codegen cache: the
+    pass generates more classes than the default 100-entry cache holds
+    (~150 at sf0.001), so an undersized cache recompiles nearly all of
+    them on every pass."""
+    from my_cudf_spark.plans.pin import release_persisted
+    from my_cudf_spark.session import CODEGEN_CACHE_ENTRIES, codegen_compile_count
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+    def one_pass():
+        for name in ("text_classifier_train_apply", "vec_kmeans"):
+            _df(spark, name).write.format("noop").mode("overwrite").save()
+            release_persisted()
+            spark.catalog.clearCache()
+
+    one_pass()
+    before = codegen_compile_count(spark)
+    one_pass()
+    assert codegen_compile_count(spark) - before <= 10
+
+
+def test_conf_sentinel_restores_plan_affecting_confs(spark):
+    """An external change to a plan-affecting profile conf is put back by
+    the next apply_runtime_confs; the drain-owned shuffle partition count
+    is left as it is."""
+    from my_cudf_spark.session import RUNTIME_CONFS, apply_runtime_confs
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    apply_runtime_confs(spark)
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        apply_runtime_confs(spark)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == RUNTIME_CONFS[
+            "spark.sql.adaptive.enabled"
+        ]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

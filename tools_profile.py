@@ -6,6 +6,11 @@ Usage:
   python tools_profile.py QUERY [QUERY ...] [--repeats N] [--explain TAG]
   python tools_profile.py --top 20            # 20 most expensive from BENCH_LOCAL
 
+Each query's stderr line also gives its codegen compile count per timed
+repeat (``CodegenMetrics`` delta): a warm query compiles ~0, so a non-zero
+count is generated-code churn (per-call literals, or a working set larger
+than the codegen cache).
+
 This is a measurement tool only (guide §1): it never persists results and
 shares bench.py's session profile so numbers are comparable.
 """
@@ -21,7 +26,7 @@ import time
 
 import bench
 from my_cudf_spark.queries import load_registry
-from my_cudf_spark.session import get_spark
+from my_cudf_spark.session import codegen_compile_count, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -66,17 +71,19 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"{name}: warmup")
         execute(q.fn(spark, SF_DIR))
         bench.release_pins(spark)  # cold-honest, same as bench.py (r12)
-        runs = []
+        runs, compiles = [], []
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{name}: timed {i}")
+            c0 = codegen_compile_count(spark)
             t0 = time.perf_counter()
             execute(q.fn(spark, SF_DIR))
             runs.append(time.perf_counter() - t0)
+            compiles.append(codegen_compile_count(spark) - c0)
             bench.release_pins(spark)
         spark.sparkContext.setJobDescription(None)
         out[name] = round(statistics.median(runs), 4)
-        print(f"{name}: median={out[name]:.3f}  runs={[round(r, 3) for r in runs]}",
-              file=sys.stderr)
+        print(f"{name}: median={out[name]:.3f}  runs={[round(r, 3) for r in runs]}"
+              f"  compiles={compiles}", file=sys.stderr)
     print(json.dumps(out))
     spark.stop()
 
