@@ -985,10 +985,11 @@ def stream_video_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_reservoir_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming weighted reservoir sampling (streaming/reservoir.py):
+    """Streaming weighted reservoir sampling, bucketed (streaming/reservoir.py):
     a value-weighted 5-row sample per event_type maintained ACROSS
-    micro-batches in O(keys × k) state — the incremental form of
-    sample_weighted's Efraimidis–Spirakis draw.  Exact, not approximate:
+    micro-batches in O(keys × k) state, held per ``hash(keys) % 8`` bucket
+    by the Python-state kernel (streaming/pystate.py) — the incremental
+    form of sample_weighted's Efraimidis–Spirakis draw.  Exact, not approximate:
     'k smallest content-keyed priorities' is an order-independent fold,
     so the final reservoir equals the batch draw over the whole fixture
     and the plain batch SQL is a bit-exact oracle.  The final snapshot

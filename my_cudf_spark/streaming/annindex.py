@@ -30,13 +30,12 @@ cell bucket.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = [
     "stream_ann_index", "seed_pq_codebooks", "pq_code_expr",
@@ -301,46 +300,22 @@ def stream_ann_index(
     corpus.  Codes are a pure function of the id under a frozen epoch,
     so the (cell, id) dedup keeps whichever copy arrived — identical by
     construction."""
+    bkt = bucket(["__cell"], buckets)
     cols = [
         F.col(cell_col).cast("int").alias("__cell"),
         F.col(id_col).cast("long").alias("__id"),
     ]
     if code_col is not None:
         cols.append(F.col(code_col).cast("array<int>").alias("__code"))
-    rows = df.select(*cols).withColumn(
-        "__bkt", F.pmod(F.col("__cell"), F.lit(buckets))
-    )
+    rows = df.select(*cols).withColumn("__bkt", bkt)
     with_codes = code_col is not None
-    out_cols = ["epoch", "cell", "n", "ids"] + (
-        ["codes"] if with_codes else []
-    )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        m = 0
-        if state.exists:
-            if with_codes:
-                cells, ids, codes_flat, m = state.get
-                codes_flat = np.asarray(codes_flat, dtype=np.int32)
-            else:
-                cells, ids = state.get
-            cells = np.asarray(cells, dtype=np.int64)
-            ids = np.asarray(ids, dtype=np.int64)
-        else:
-            cells = np.empty(0, dtype=np.int64)
-            ids = np.empty(0, dtype=np.int64)
-            codes_flat = np.empty(0, dtype=np.int32)
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=out_cols)
-            return
-        new = pd.concat(batch, ignore_index=True)
+    def step(_bkt, state, new):
+        cells, ids = (a.astype(np.int64) for a in state[:2])
         cells = np.concatenate([cells, new["__cell"].to_numpy(np.int64)])
         ids = np.concatenate([ids, new["__id"].to_numpy(np.int64)])
         if with_codes:
+            codes_flat, m = state[2], state[3] or 0
             # frozen-epoch contract: every code word in an epoch has the
             # same length m.  A divergent batch would otherwise silently
             # misalign ids and code words whenever the element count
@@ -361,12 +336,12 @@ def stream_ann_index(
                     f"stream_ann_index: batch code-word length {batch_m} != "
                     f"state m={m} (frozen-epoch contract violation)"
                 )
-            new_codes = np.array(
-                [list(c) for c in new["__code"]], dtype=np.int32
-            )
-            m = m or batch_m
+            m = batch_m
             codes = np.concatenate(
-                [codes_flat.reshape(-1, m), new_codes.reshape(-1, m)]
+                [
+                    codes_flat.reshape(-1, m),
+                    np.stack(new["__code"].to_numpy()).astype(np.int32),
+                ]
             )
         # cell-major, id-minor: per-cell postings are contiguous sorted
         # slices — state stays canonical whatever the arrival order.
@@ -375,49 +350,30 @@ def stream_ann_index(
         # grows only on genuinely new ids — the snapshot stays a pure
         # function of the final id SET under at-least-once delivery.
         order = np.lexsort((ids, cells))
+        keep = np.ones(len(order), dtype=bool)
+        keep[1:] = (np.diff(cells[order]) != 0) | (np.diff(ids[order]) != 0)
+        order = order[keep]
         cells, ids = cells[order], ids[order]
-        if with_codes:
-            codes = codes[order]
-        if len(cells):
-            keep = np.ones(len(cells), dtype=bool)
-            keep[1:] = (cells[1:] != cells[:-1]) | (ids[1:] != ids[:-1])
-            cells, ids = cells[keep], ids[keep]
-            if with_codes:
-                codes = codes[keep]
         touched = np.unique(new["__cell"].to_numpy(np.int64))
         starts = np.searchsorted(cells, touched, side="left")
         ends = np.searchsorted(cells, touched, side="right")
-        out = {
-            "epoch": np.full(len(touched), epoch, dtype=np.int64),
-            "cell": touched.astype(np.int32),
-            "n": (ends - starts).astype(np.int64),
-            "ids": [ids[a:b].tolist() for a, b in zip(starts, ends)],
-        }
-        if with_codes:
-            out["codes"] = [
-                codes[a:b].reshape(-1).tolist() for a, b in zip(starts, ends)
-            ]
-            state.update(
-                (
-                    cells.tolist(),
-                    ids.tolist(),
-                    codes.reshape(-1).tolist(),
-                    int(m),
-                )
-            )
-        else:
-            state.update((cells.tolist(), ids.tolist()))
-        yield pd.DataFrame(out)
+        out = pd.DataFrame(
+            {
+                "epoch": np.full(len(touched), epoch, dtype=np.int64),
+                "cell": touched.astype(np.int32),
+                "n": (ends - starts).astype(np.int64),
+                "ids": [ids[a:b].tolist() for a, b in zip(starts, ends)],
+            }
+        )
+        if not with_codes:
+            return (cells, ids), out
+        codes = codes[order]
+        out["codes"] = [codes[a:b].reshape(-1).tolist() for a, b in zip(starts, ends)]
+        return (cells, ids, codes.reshape(-1), m), out
 
     out_struct = "epoch long, cell int, n long, ids array<long>"
     state_struct = "cells array<int>, ids array<long>"
     if with_codes:
         out_struct += ", codes array<int>"
         state_struct += ", codes array<int>, m int"
-    return rows.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_struct,
-        stateStructType=state_struct,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return python_state(rows, ["__bkt"], state_struct, out_struct, step)

@@ -25,7 +25,7 @@ duplicate MISSES dedup against the pending set, and cross-batch re-probes
 of already-hit grams just re-emit ``true`` (harmless under ``bool_or``).
 
 State layout: the ``m_bits``-position space is bucketed by
-``word_idx % buckets`` (word_idx = pos // 63, the batch bitmap's word
+``hash(word_idx) % buckets`` (word_idx = pos // 63, the batch bitmap's word
 key) — a (gram, j) probe always routes to the same bucket, which is what
 makes in-bucket dedup globally correct.  One state row per bucket holds
 (set words, pending probes); pending is bounded by DISTINCT unresolved
@@ -40,14 +40,13 @@ the drained update log.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_cudf_spark.operators.decontam import bloom_probe_positions
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = ["stream_bloom_decontam", "gram_id"]
 
@@ -80,6 +79,9 @@ def stream_bloom_decontam(
     for per-document reports.  ``gram`` is :func:`gram_id` of the gram
     string (the probe positions hash the string itself)."""
     pos = bloom_probe_positions(F.col("gram"), m_bits, k, salt)
+    # a (gram, j) probe and the bench bit it tests share a Bloom word, so
+    # keying the state on the word keeps both in one bucket
+    bkt = bucket([(F.col("__pos") / 63).cast("int")], buckets)
     # explode_outer + post-filter instead of explode (r12, guide §7.2
     # duplicated-subtrees): a plain explode makes Catalyst infer
     # ``size(grams) > 0 AND isnotnull(grams)`` and push it below the
@@ -102,43 +104,17 @@ def stream_bloom_decontam(
             gram_id("gram").alias("__gram"),
             F.posexplode_outer(F.array(*pos)).alias("__j", "__pos"),
         )
-        .withColumn(
-            "__bkt", F.pmod((F.col("__pos") / 63).cast("int"), F.lit(buckets))
-        )
     )
 
-    out_schema = "gram long, j int, hit boolean"
-    state_schema = (
-        "widx array<int>, wbits array<long>, p_pos array<int>,"
-        " p_gram array<long>, p_j array<int>"
-    )
     n_words = (m_bits + 62) // 63
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # Dense word array per bucket (n_words int64 = 4 KB at the
-        # default m_bits) — probe checks are pure vectorized indexing.
+    def step(_bkt, state, new):
+        widx, wbits, p_pos, p_gram, p_j = state
+        # Dense word array per bucket (n_words int64 = 4 KB at the default
+        # m_bits) — probe checks are pure vectorized indexing.
         words = np.zeros(n_words, dtype=np.int64)
-        if state.exists:
-            widx, wbits, p_pos, p_gram, p_j = state.get
-            words[np.asarray(widx, dtype=np.int64)] = np.asarray(
-                wbits, dtype=np.int64
-            )
-            pend = [
-                np.asarray(a, dtype=np.int64) for a in (p_pos, p_gram, p_j)
-            ]
-        else:
-            pend = [np.empty(0, dtype=np.int64) for _ in range(3)]
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["gram", "j", "hit"])
-            return
-        new = pd.concat(batch, ignore_index=True)
+        words[widx] = wbits
+        pend = [p_pos.astype(np.int64), p_gram, p_j.astype(np.int64)]
         bench_mask = new["__bench"].to_numpy(bool)
 
         # 1) bench probes set bits FIRST (intra-batch determinism; the
@@ -156,11 +132,7 @@ def stream_bloom_decontam(
             if hit_now.any():
                 outs.append(
                     pd.DataFrame(
-                        {
-                            "gram": pend[1][hit_now],
-                            "j": pend[2][hit_now].astype("int32"),
-                            "hit": True,
-                        }
+                        {"gram": pend[1][hit_now], "j": pend[2][hit_now], "hit": True}
                     )
                 )
                 pend = [a[~hit_now] for a in pend]
@@ -169,58 +141,27 @@ def stream_bloom_decontam(
         #    (gram, j) — duplicates within the batch drop here, duplicate
         #    MISSES across batches drop against the pending set.
         train = new.loc[~bench_mask].drop_duplicates(["__gram", "__j"])
-        if len(train):
-            tpos = train["__pos"].to_numpy(np.int64)
-            tgram = train["__gram"].to_numpy(np.int64)
-            tj = train["__j"].to_numpy(np.int64)
-            hit = ((words[tpos // 63] >> (tpos % 63)) & 1).astype(bool)
-            miss_idx = np.flatnonzero(~hit)
-            fresh_mask = np.zeros(len(train), dtype=bool)
-            if len(miss_idx):
-                # (gram, j) composite key: j < 4, gram < 2^60
-                fresh_mask[miss_idx] = ~np.isin(
-                    tgram[miss_idx] * 4 + tj[miss_idx],
-                    pend[1] * 4 + pend[2],
-                )
-            emit_mask = hit | fresh_mask
-            if emit_mask.any():
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "gram": tgram[emit_mask],
-                            "j": tj[emit_mask].astype("int32"),
-                            "hit": hit[emit_mask],
-                        }
-                    )
-                )
-            if fresh_mask.any():
-                pend = [
-                    np.concatenate([pend[0], tpos[fresh_mask]]),
-                    np.concatenate([pend[1], tgram[fresh_mask]]),
-                    np.concatenate([pend[2], tj[fresh_mask]]),
-                ]
+        tpos = train["__pos"].to_numpy(np.int64)
+        tgram = train["__gram"].to_numpy(np.int64)
+        tj = train["__j"].to_numpy(np.int64)
+        hit = ((words[tpos // 63] >> (tpos % 63)) & 1).astype(bool)
+        # (gram, j) composite key: j < 4, gram < 2^60
+        fresh = ~hit & ~np.isin(tgram * 4 + tj, pend[1] * 4 + pend[2])
+        emit = hit | fresh
+        outs.append(pd.DataFrame({"gram": tgram[emit], "j": tj[emit], "hit": hit[emit]}))
+        pend = [np.concatenate([p, t[fresh]]) for p, t in zip(pend, (tpos, tgram, tj))]
 
         nz = np.nonzero(words)[0]
-        # .tolist() converts at C speed — a Python int() loop here costs
-        # seconds per batch once pending reaches vocabulary volume.
-        state.update(
-            (
-                nz.tolist(),
-                words[nz].tolist(),
-                pend[0].tolist(),
-                pend[1].tolist(),
-                pend[2].tolist(),
-            )
+        return (
+            [nz, words[nz], *pend],
+            pd.concat(outs, ignore_index=True),
         )
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-        else:
-            yield pd.DataFrame(columns=["gram", "j", "hit"])
 
-    return probes.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        probes.withColumn("__bkt", bkt),
+        ["__bkt"],
+        "widx array<int>, wbits array<long>, p_pos array<int>,"
+        " p_gram array<long>, p_j array<int>",
+        "gram long, j int, hit boolean",
+        step,
     )

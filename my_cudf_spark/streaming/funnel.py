@@ -32,14 +32,13 @@ everything — the replay-twin mode, exact under arbitrary lateness.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = ["stream_funnel"]
 
@@ -63,39 +62,24 @@ def _fold(
     return stage, since
 
 
-def _make_update(n_steps: int, seal_lag: int | None):
-    """Per-bucket state-update function (module-level so the seal /
-    fold-split logic is unit-testable with a fake GroupState and a
-    controlled batch order — the file-replay harness delivers chunks in
-    arbitrary order, which a bounded ``seal_lag`` by contract does not
-    cover)."""
+STATE = (
+    "su array<long>, sstage array<int>, ssince array<long>,"
+    " sn array<long>, us array<long>, ts array<long>,"
+    " eid array<long>, st array<int>, wm long"
+)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            su, sstage, ssince, sn, us, ts, eid, st, wm = state.get
-            su = np.asarray(su, dtype=np.int64)
-            sstage = np.asarray(sstage, dtype=np.int64)
-            ssince = np.asarray(ssince, dtype=np.int64)
-            sn = np.asarray(sn, dtype=np.int64)
-            us, ts, eid, st = (
-                np.asarray(a, dtype=np.int64) for a in (us, ts, eid, st)
-            )
-            wm = int(wm)
-        else:
-            su, sstage, ssince, sn = (
-                np.empty(0, dtype=np.int64) for _ in range(4)
-            )
-            us, ts, eid, st = (np.empty(0, dtype=np.int64) for _ in range(4))
-            wm = _LONG_MIN
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["user", "stage", "version"])
-            return
-        new = pd.concat(batch, ignore_index=True)
+
+def _make_step(n_steps: int, seal_lag: int | None):
+    """Per-bucket fold (module-level so the seal / fold-split logic is
+    unit-testable with a controlled batch order — the file-replay harness
+    delivers chunks in arbitrary order, which a bounded ``seal_lag`` by
+    contract does not cover)."""
+
+    def step(_bkt, state, new):
+        su, sstage, ssince, sn, us, ts, eid, st = (
+            a.astype(np.int64) for a in state[:8]
+        )
+        wm = _LONG_MIN if state[8] is None else state[8]
         us = np.concatenate([us, new["__u"].to_numpy(np.int64)])
         ts = np.concatenate([ts, new["__ts"].to_numpy(np.int64)])
         eid = np.concatenate([eid, new["__eid"].to_numpy(np.int64)])
@@ -161,21 +145,16 @@ def _make_update(n_steps: int, seal_lag: int | None):
                 keep = ~old
                 us, ts, eid, st = us[keep], ts[keep], eid[keep], st[keep]
 
-        state.update(
-            (
-                su.tolist(), sstage.tolist(), ssince.tolist(), sn.tolist(),
-                us.tolist(), ts.tolist(), eid.tolist(), st.tolist(), int(wm),
-            )
-        )
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "user": out_u,
                 "stage": pd.array(out_stage, dtype="int32"),
                 "version": out_ver,
             }
         )
+        return (su, sstage, ssince, sn, us, ts, eid, st, wm), out
 
-    return update
+    return step
 
 
 def stream_funnel(
@@ -210,6 +189,7 @@ def stream_funnel(
                 f"stream_funnel {what} must be an integral type, got "
                 f"{df.schema[c].dataType.simpleString()} (int64 state arrays)"
             )
+    bkt = bucket(["__u"], buckets)
     step_idx = F.array_position(
         F.array(*[F.lit(s) for s in steps]), F.col(type_col)
     )
@@ -221,18 +201,12 @@ def stream_funnel(
             F.col(id_col).alias("__eid"),
             (step_idx - 1).cast("int").alias("__step"),
         )
-        .withColumn("__bkt", F.pmod(F.hash("__u"), F.lit(buckets)))
+        .withColumn("__bkt", bkt)
     )
-    update = _make_update(len(steps), seal_lag)
-
-    return rows.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType="user long, stage int, version long",
-        stateStructType=(
-            "su array<long>, sstage array<int>, ssince array<long>,"
-            " sn array<long>, us array<long>, ts array<long>,"
-            " eid array<long>, st array<int>, wm long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        rows,
+        ["__bkt"],
+        STATE,
+        "user long, stage int, version long",
+        _make_step(len(steps), seal_lag),
     )

@@ -30,16 +30,14 @@ deployments, each refresh consuming the previous drain's means.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_cudf_spark.operators.similarity import md5_rademacher_planes
+from my_cudf_spark.streaming.pystate import python_state
 
 __all__ = ["stream_cluster_stats"]
 
@@ -81,32 +79,18 @@ def stream_cluster_stats(
         nano.alias("__nx"),
     )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, sums = state.get
-            acc = np.array(sums, dtype=np.int64)
-        else:
-            n, acc = 0, np.zeros(dim, dtype=np.int64)
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["cell", "n", "sums"])
-            return
-        new = pd.concat(batch, ignore_index=True)
-        acc = acc + np.stack(new["__nx"].to_numpy()).astype(np.int64).sum(axis=0)
-        n += len(new)
-        state.update((int(n), [int(v) for v in acc]))
-        yield pd.DataFrame(
-            {"cell": [key[0]], "n": [int(n)], "sums": [[int(v) for v in acc]]}
-        )
+    def step(key, state, new):
+        n, sums = state
+        n = (n or 0) + len(new)
+        acc = np.stack(new["__nx"].to_numpy()).astype(np.int64).sum(axis=0)
+        if len(sums):
+            acc += sums
+        return (n, acc), pd.DataFrame({"cell": [key[0]], "n": [n], "sums": [acc.tolist()]})
 
-    return rows.groupBy("cell").applyInPandasWithState(
-        update,
-        outputStructType="cell int, n long, sums array<long>",
-        stateStructType="n long, sums array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        rows,
+        ["cell"],
+        "n long, sums array<long>",
+        "cell int, n long, sums array<long>",
+        step,
     )

@@ -36,15 +36,15 @@ streaming dedup ops.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
-from typing import Any, Iterator
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from my_cudf_spark.streaming.phash import band_votes
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = ["attach_minhash", "stream_lsh_dedup"]
 
@@ -140,6 +140,7 @@ def stream_lsh_dedup(
     nlanes = bands * rows
     if min_matches < 1 or min_matches > nlanes:
         raise ValueError("min_matches must be in [1, bands*rows]")
+    bkt = bucket(["__bi", "__bv"], buckets)
 
     if not df.isStreaming:
         s = df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig")).filter(
@@ -178,98 +179,48 @@ def stream_lsh_dedup(
             (~F.coalesce(F.col("__dropped"), F.lit(False))).alias("keep"),
         )
 
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    id_type = typ[id_col]
-    out_schema = f"id {id_type}, keep boolean"
-    state_schema = (
-        f"bis array<int>, bvs array<string>, ids array<{id_type}>,"
-        " flat array<long>"
-    )
+    id_type = df.schema[id_col].dataType.simpleString()
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bis, bvs, ids, flat = (list(x) for x in state.get)
-        else:
-            bis, bvs, ids, flat = [], [], [], []
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["id", "keep"])
-            return
-        new = pd.concat(batch, ignore_index=True)
-        S_old = (
-            np.asarray(flat, dtype=np.int64).reshape(-1, nlanes)
-            if flat
-            else np.empty((0, nlanes), dtype=np.int64)
-        )
-        S_new = (
-            np.asarray([np.asarray(s, dtype=np.int64) for s in new["__sig"]])
-            if len(new)
-            else np.empty((0, nlanes), dtype=np.int64)
-        )
-        old = pd.DataFrame(
-            {
-                "bi": pd.array(bis, dtype="int32"),
-                "bv": pd.array(bvs, dtype="string"),
-                "id": pd.array(ids, dtype="int64"),
-                "row": np.arange(len(ids)),
-                "old": True,
-            }
+    def step(_bkt, state, new):
+        bis, bvs, ids, flat = state
+        # one stored signature per band entry: row i of ``everything`` is
+        # row i of ``sigs``
+        sigs = np.concatenate(
+            [flat.reshape(-1, nlanes), np.stack(new["__sig"].to_numpy()).astype(np.int64)]
         )
         new_entries = pd.DataFrame(
             {
-                "bi": new["__bi"].astype("int32"),
-                "bv": new["__bv"].astype("string"),
-                "id": new["__id"].astype("int64"),
-                "row": np.arange(len(new)),
-                "old": False,
+                "bi": new["__bi"].to_numpy(np.int32),
+                "bv": new["__bv"].to_numpy(object),
+                "id": new["__id"].to_numpy(np.int64),
             }
         )
-        everything = pd.concat([old, new_entries], ignore_index=True)
-        cand = new_entries.merge(everything, on=["bi", "bv"], suffixes=("_a", "_b"))
-        cand = cand[cand["id_a"] != cand["id_b"]]
-        out: dict[int, bool] = {}
-        if len(cand):
-            A = S_new[cand["row_a"].to_numpy()]
-            B = np.empty_like(A)
-            mo = cand["old_b"].to_numpy()
-            rb = cand["row_b"].to_numpy()
-            if mo.any():
-                B[mo] = S_old[rb[mo]]
-            if (~mo).any():
-                B[~mo] = S_new[rb[~mo]]
-            near = (A == B).sum(axis=1) >= min_matches
-            hits = cand[near]
-            higher = np.maximum(
-                hits["id_a"].to_numpy(np.int64), hits["id_b"].to_numpy(np.int64)
+        everything = pd.concat(
+            [pd.DataFrame({"bi": bis, "bv": bvs, "id": ids}), new_entries],
+            ignore_index=True,
+        )
+        everything["row"] = np.arange(len(everything))
+        out = band_votes(
+            everything,
+            len(ids),
+            lambda c: (sigs[c["row_a"].to_numpy()] == sigs[c["row_b"].to_numpy()]).sum(
+                axis=1
             )
-            for hid in higher:
-                out[int(hid)] = False
-        for nid in new_entries["id"].drop_duplicates():
-            out.setdefault(int(nid), True)
-        bis.extend(int(x) for x in new_entries["bi"])
-        bvs.extend(str(x) for x in new_entries["bv"])
-        ids.extend(int(x) for x in new_entries["id"])
-        flat.extend(int(v) for s in new["__sig"] for v in s)
-        state.update((bis, bvs, ids, flat))
-        yield pd.DataFrame({"id": list(out.keys()), "keep": list(out.values())})
+            >= min_matches,
+        )
+        return [everything[c].to_numpy() for c in ("bi", "bv", "id")] + [
+            sigs.reshape(-1)
+        ], out
 
     banded = df.filter(F.col(sig_col).isNotNull()).select(
         F.col(id_col).alias("__id"),
         F.col(sig_col).alias("__sig"),
         F.posexplode(_band_exprs(sig_col, bands, rows)).alias("__bi", "__bv"),
     )
-    return (
-        banded.withColumn("__bkt", F.pmod(F.hash("__bi", "__bv"), F.lit(buckets)))
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return python_state(
+        banded.withColumn("__bkt", bkt),
+        ["__bkt"],
+        f"bis array<int>, bvs array<string>, ids array<{id_type}>, flat array<long>",
+        f"id {id_type}, keep boolean",
+        step,
     )

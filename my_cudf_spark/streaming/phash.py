@@ -42,16 +42,14 @@ like the text-side streaming dedup.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-from typing import Any, Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["stream_phash_dedup"]
+from my_cudf_spark.streaming.pystate import bucket, python_state
+
+__all__ = ["band_votes", "stream_phash_dedup"]
 
 _M1 = np.uint64(0x5555555555555555)
 _M2 = np.uint64(0x3333333333333333)
@@ -86,6 +84,23 @@ def _band_offsets(max_hamming: int, sig_bits: int) -> list[int]:
     return offs
 
 
+def band_votes(everything: pd.DataFrame, n_old: int, near) -> pd.DataFrame:
+    """``(id, keep)`` votes of one bucket of a banded index: the entries
+    ``(bi, bv, id, …)`` past ``n_old`` are this batch's arrivals; they are
+    compared with every entry sharing a band value, and ``near(cand)``
+    marks the candidate pairs that are duplicates.  In a duplicate pair
+    the HIGHER id is dropped — for an id already in state that is a
+    revocation; every other arrival votes true."""
+    cand = everything.iloc[n_old:].merge(
+        everything, on=["bi", "bv"], suffixes=("_a", "_b")
+    )
+    cand = cand[cand["id_a"] != cand["id_b"]]
+    hits = cand[near(cand)]
+    out = dict.fromkeys(everything["id"].iloc[n_old:].tolist(), True)
+    out.update(dict.fromkeys(np.maximum(hits["id_a"], hits["id_b"]).tolist(), False))
+    return pd.DataFrame({"id": list(out), "keep": list(out.values())})
+
+
 def stream_phash_dedup(
     df: DataFrame,
     id_col: str,
@@ -103,6 +118,7 @@ def stream_phash_dedup(
     oracle for the streamed final state."""
     offs = _band_offsets(max_hamming, sig_bits)
     nbands = max_hamming + 1
+    bkt = bucket(["__bi", "__bv"], buckets)
 
     if not df.isStreaming:
         from my_cudf_spark.operators.multimodal import phash_neardup_pairs
@@ -118,77 +134,28 @@ def stream_phash_dedup(
             (~F.coalesce(F.col("__dropped"), F.lit(False))).alias("keep"),
         )
 
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    id_type = typ[id_col]
-    out_schema = f"id {id_type}, keep boolean"
-    state_schema = (
-        f"bis array<int>, bvs array<long>, ids array<{id_type}>,"
-        " sigs array<long>"
-    )
+    id_type = df.schema[id_col].dataType.simpleString()
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bis, bvs, ids, sigs = (list(a) for a in state.get)
-        else:
-            bis, bvs, ids, sigs = [], [], [], []
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["id", "keep"])
-            return
-        new = pd.concat(batch, ignore_index=True)
-        old = pd.DataFrame(
-            {
-                "bi": pd.array(bis, dtype="int32"),
-                "bv": pd.array(bvs, dtype="int64"),
-                "id": pd.array(ids, dtype="int64"),
-                "sig": pd.array(sigs, dtype="int64"),
-            }
-        )
+    def step(_bkt, state, new):
         new_entries = pd.DataFrame(
             {
-                "bi": new["__bi"].astype("int32"),
-                "bv": new["__bv"].astype("int64"),
-                "id": new[id_col].astype("int64"),
-                "sig": new[sig_col].astype("int64"),
+                "bi": new["__bi"].to_numpy(np.int32),
+                "bv": new["__bv"].to_numpy(np.int64),
+                "id": new[id_col].to_numpy(np.int64),
+                "sig": new[sig_col].to_numpy(np.int64),
             }
         )
+        old = pd.DataFrame(dict(zip(new_entries.columns, state)))
         everything = pd.concat([old, new_entries], ignore_index=True)
-        # candidates: new × (old + new) sharing a band key in this bucket
-        cand = new_entries.merge(
-            everything, on=["bi", "bv"], suffixes=("_a", "_b")
-        )
-        cand = cand[cand["id_a"] != cand["id_b"]]
-        out: dict[int, bool] = {}
-        if len(cand):
-            ham = _popcount64(
-                np.bitwise_xor(
-                    cand["sig_a"].to_numpy(np.int64),
-                    cand["sig_b"].to_numpy(np.int64),
-                )
+        out = band_votes(
+            everything,
+            len(old),
+            lambda c: _popcount64(
+                np.bitwise_xor(c["sig_a"].to_numpy(), c["sig_b"].to_numpy())
             )
-            hits = cand[ham <= max_hamming]
-            # in any qualifying pair the HIGHER id is the dropped one;
-            # higher ids already in state get a revocation emission
-            higher = np.maximum(
-                hits["id_a"].to_numpy(np.int64), hits["id_b"].to_numpy(np.int64)
-            )
-            for hid in higher:
-                out[int(hid)] = False
-        # every distinct new arrival votes: true unless dropped above
-        for nid in new_entries["id"].drop_duplicates():
-            out.setdefault(int(nid), True)
-        bis.extend(int(x) for x in new_entries["bi"])
-        bvs.extend(int(x) for x in new_entries["bv"])
-        ids.extend(int(x) for x in new_entries["id"])
-        sigs.extend(int(x) for x in new_entries["sig"])
-        state.update((bis, bvs, ids, sigs))
-        yield pd.DataFrame(
-            {"id": list(out.keys()), "keep": list(out.values())}
+            <= max_hamming,
         )
+        return [everything[c].to_numpy() for c in everything.columns], out
 
     band_vals = F.array(
         *[
@@ -203,15 +170,10 @@ def stream_phash_dedup(
         F.col(sig_col),
         F.posexplode(band_vals).alias("__bi", "__bv"),
     )
-    bucket = F.pmod(F.hash(F.col("__bi"), F.col("__bv")), F.lit(buckets))
-    return (
-        banded.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return python_state(
+        banded.withColumn("__bkt", bkt),
+        ["__bkt"],
+        f"bis array<int>, bvs array<long>, ids array<{id_type}>, sigs array<long>",
+        f"id {id_type}, keep boolean",
+        step,
     )

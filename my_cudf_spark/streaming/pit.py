@@ -34,14 +34,14 @@ snapshot.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
-from typing import Any, Iterator
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from my_cudf_spark.streaming.pystate import python_state
 
 __all__ = ["stream_pit_enrich"]
 
@@ -135,77 +135,41 @@ def stream_pit_enrich(
         )
     )
 
-    out_schema = f"{id_col} long"
-    for k in value_kinds:
-        out_schema += f", {k}_value double"
-    for k in count_kinds:
-        out_schema += f", n_{k} long"
-    out_schema += ", version long"
-    out_cols = (
-        [id_col]
-        + [f"{k}_value" for k in value_kinds]
-        + [f"n_{k}" for k in count_kinds]
-        + ["version"]
-    )
-    state_schema = (
-        "sp_ids array<long>, sp_ts array<long>, ft_kind array<int>,"
-        " ft_ts array<long>, ft_val array<double>, version long"
+    out_schema = ", ".join(
+        [f"{id_col} long"]
+        + [f"{k}_value double" for k in value_kinds]
+        + [f"n_{k} long" for k in count_kinds]
+        + ["version long"]
     )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            sp_ids, sp_ts, ft_kind, ft_ts, ft_val, version = state.get
-            sp_ids, sp_ts = list(sp_ids), list(sp_ts)
-            ft_kind, ft_ts, ft_val = list(ft_kind), list(ft_ts), list(ft_val)
-        else:
-            sp_ids, sp_ts, ft_kind, ft_ts, ft_val, version = [], [], [], [], [], 0
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if batch:
-            new = pd.concat(batch, ignore_index=True)
-            is_spine = new["__kind"].to_numpy() == -1
-            sp_ids.extend(int(x) for x in new.loc[is_spine, "__id"])
-            sp_ts.extend(int(x) for x in new.loc[is_spine, "__ts"])
-            ft = new.loc[~is_spine]
-            ft_kind.extend(int(x) for x in ft["__kind"])
-            ft_ts.extend(int(x) for x in ft["__ts"])
-            ft_val.extend(
-                float(x) if pd.notna(x) else None for x in ft["__val"]
-            )
-        version += 1
-        state.update((sp_ids, sp_ts, ft_kind, ft_ts, ft_val, version))
-        if not sp_ids:
-            yield pd.DataFrame(columns=out_cols)
-            return
-        sp_ts_a = np.asarray(sp_ts, dtype=np.int64)
-        kinds_a = np.asarray(ft_kind, dtype=np.int64)
-        ts_a = np.asarray(ft_ts, dtype=np.int64)
-        out: dict[str, list] = {id_col: sp_ids}
+    def step(_key, state, new):
+        sp_ids, sp_ts, ft_kind, ft_ts, ft_val, version = state
+        version = (version or 0) + 1
+        is_spine = new["__kind"].to_numpy() == -1
+        ft = new.loc[~is_spine]
+        sp_ids = np.concatenate([sp_ids, new.loc[is_spine, "__id"].to_numpy(np.int64)])
+        sp_ts = np.concatenate([sp_ts, new.loc[is_spine, "__ts"].to_numpy(np.int64)])
+        ft_kind = np.concatenate([ft_kind, ft["__kind"].to_numpy(np.int32)])
+        ft_ts = np.concatenate([ft_ts, ft["__ts"].to_numpy(np.int64)])
+        ft_val = np.concatenate([ft_val, ft["__val"].to_numpy(np.float64)])
+        out = pd.DataFrame({id_col: sp_ids})
         for k in value_kinds:
-            mask = kinds_a == kind_idx[k]
-            kts, kvals = ts_a[mask], [v for m, v in zip(mask, ft_val) if m]
-            order = np.argsort(kts, kind="stable")
-            kts = kts[order]
-            kvals = [kvals[i] for i in order]
-            pos = np.searchsorted(kts, sp_ts_a, side="right") - 1
-            out[f"{k}_value"] = [
-                kvals[p] if p >= 0 else None for p in pos
-            ]
+            mask = ft_kind == kind_idx[k]
+            order = np.argsort(ft_ts[mask], kind="stable")
+            pos = np.searchsorted(ft_ts[mask][order], sp_ts, side="right") - 1
+            # a trailing NaN answers position -1 (no feature at or before)
+            out[f"{k}_value"] = np.append(ft_val[mask][order], np.nan)[pos]
         for k in count_kinds:
-            kts = np.sort(ts_a[kinds_a == kind_idx[k]])
-            out[f"n_{k}"] = np.searchsorted(kts, sp_ts_a, side="right").astype(
-                np.int64
-            )
-        out["version"] = [version] * len(sp_ids)
-        yield pd.DataFrame(out, columns=out_cols)
+            kts = np.sort(ft_ts[ft_kind == kind_idx[k]])
+            out[f"n_{k}"] = np.searchsorted(kts, sp_ts, side="right").astype(np.int64)
+        out["version"] = version
+        return (sp_ids, sp_ts, ft_kind, ft_ts, ft_val, version), out
 
-    return prepped.groupBy("__key").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        prepped,
+        ["__key"],
+        "sp_ids array<long>, sp_ts array<long>, ft_kind array<int>,"
+        " ft_ts array<long>, ft_val array<double>, version long",
+        out_schema,
+        step,
     )

@@ -31,14 +31,13 @@ posting-list-snapshot convention.  Neither carries text or token ids.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = ["stream_exact_dedup_min", "stream_pack_bestfit"]
 
@@ -58,35 +57,14 @@ def stream_exact_dedup_min(
     rows = df.select(
         F.col(hash_col).cast("string").alias("__h"),
         F.col(id_col).cast("long").alias("__id"),
-    ).withColumn(
-        "__bkt",
-        F.pmod(
-            F.conv(F.substring(F.md5(F.col("__h")), 1, 15), 16, 10).cast("long"),
-            F.lit(buckets),
-        ),
-    )
+    ).withColumn("__bkt", bucket(["__h"], buckets))
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hs, ids = state.get
-            # fixed-width unicode (not object) — np.lexsort/searchsorted
-            # need a sortable dtype; concat promotes to the wider width
-            hs = np.asarray(hs, dtype=np.str_)
-            ids = np.asarray(ids, dtype=np.int64)
-        else:
-            hs = np.empty(0, dtype=np.str_)
-            ids = np.empty(0, dtype=np.int64)
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["h", "keep_id"])
-            return
-        new = pd.concat(batch, ignore_index=True)
-        allh = np.concatenate([hs, np.asarray(new["__h"].tolist(), dtype=np.str_)])
-        allid = np.concatenate([ids, new["__id"].to_numpy(np.int64)])
+    def step(_bkt, state, new):
+        # fixed-width unicode (not object) — np.lexsort/searchsorted need a
+        # sortable dtype; concat promotes to the wider width
+        new_h = np.asarray(new["__h"].tolist(), dtype=np.str_)
+        allh = np.concatenate([state[0].astype(np.str_), new_h])
+        allid = np.concatenate([state[1], new["__id"].to_numpy(np.int64)])
         # hash-major, id-minor sort → min id per hash is the first row of
         # each hash run; state stays canonical (one row per hash)
         order = np.lexsort((allid, allh))
@@ -94,18 +72,16 @@ def stream_exact_dedup_min(
         first = np.ones(len(allh), dtype=bool)
         first[1:] = allh[1:] != allh[:-1]
         hs, ids = allh[first], allid[first]
-        touched = np.unique(np.asarray(new["__h"].tolist(), dtype=np.str_))
-        at = np.searchsorted(hs, touched)
-        out = pd.DataFrame({"h": touched, "keep_id": ids[at]})
-        state.update((hs.tolist(), [int(v) for v in ids]))
-        yield out
+        touched = np.unique(new_h)
+        out = pd.DataFrame({"h": touched, "keep_id": ids[np.searchsorted(hs, touched)]})
+        return (hs, ids), out
 
-    return rows.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType="h string, keep_id long",
-        stateStructType="hs array<string>, ids array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        rows,
+        ["__bkt"],
+        "hs array<string>, ids array<long>",
+        "h string, keep_id long",
+        step,
     )
 
 
@@ -157,58 +133,34 @@ def stream_pack_bestfit(
         )
     )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, state, new):
         size_class, shard = int(key[0]), int(key[1])
-        if state.exists:
-            ids, cnts = state.get
-            ids = np.asarray(ids, dtype=np.int64)
-            cnts = np.asarray(cnts, dtype=np.int64)
-        else:
-            ids = np.empty(0, dtype=np.int64)
-            cnts = np.empty(0, dtype=np.int64)
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(
-                columns=["id", "size_class", "shard", "pack_idx", "slot", "version"]
-            )
-            return
-        new = pd.concat(batch, ignore_index=True)
-        ids = np.concatenate([ids, new["__id"].to_numpy(np.int64)])
-        cnts = np.concatenate([cnts, new["__n"].to_numpy(np.int64)])
-        # redelivery collapses (counts are a pure function of the id)
+        ids = np.concatenate([state[0], new["__id"].to_numpy(np.int64)])
+        cnts = np.concatenate([state[1], new["__n"].to_numpy(np.int64)])
+        # redelivery collapses (counts are a pure function of the id);
+        # unique() leaves the state sorted by id
         ids, at = np.unique(ids, return_index=True)
         cnts = cnts[at]
         # the batch pack_bestfit order: count DESC, id ASC
         order = np.lexsort((ids, -cnts))
-        ids, cnts = ids[order], cnts[order]
         per_pack = max(1, size_class)
         rn = np.arange(len(ids), dtype=np.int64)
         out = pd.DataFrame(
             {
-                "id": ids,
-                "size_class": np.full(len(ids), size_class, dtype=np.int64),
-                "shard": np.full(len(ids), shard, dtype=np.int64),
+                "id": ids[order],
+                "size_class": size_class,
+                "shard": shard,
                 "pack_idx": rn // per_pack,
                 "slot": (rn % per_pack).astype(np.int32),
-                "version": np.full(len(ids), len(ids), dtype=np.int64),
+                "version": len(ids),
             }
         )
-        # state re-sorted by id keeps the unique() merge O(n log n)
-        back = np.argsort(ids)
-        state.update(([int(v) for v in ids[back]], [int(v) for v in cnts[back]]))
-        yield out
+        return (ids, cnts), out
 
-    return rows.groupBy("__cls", "__shard").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "id long, size_class long, shard long, pack_idx long, "
-            "slot int, version long"
-        ),
-        stateStructType="ids array<long>, cnts array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return python_state(
+        rows,
+        ["__cls", "__shard"],
+        "ids array<long>, cnts array<long>",
+        "id long, size_class long, shard long, pack_idx long, slot int, version long",
+        step,
     )

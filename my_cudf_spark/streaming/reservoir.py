@@ -1,4 +1,5 @@
-"""Streaming weighted reservoir sampling (per-key, bounded state).
+"""Streaming weighted reservoir sampling (a k-row sample per key, bounded
+state).
 
 The sampling tier (operators/sampling.py) is batch-shaped: every sampler
 is a pure function of the full corpus.  A curation STREAM needs the same
@@ -16,24 +17,25 @@ The reference has no streaming machinery at all (SURVEY.md §2.12;
 custreamz kafka.py:82-176 is offset-range batch pulls) — this is
 capability-superset territory, like streaming/quantiles.py.
 
-Scale: state is O(keys × k); the priority is computed JVM-side BEFORE the
-stateful op (one md5 + ln per row inside whole-stage codegen), so the
-Python state function only merges (priority, item) pairs already ≤ batch
-size, and emits ≤ k rows per updated key per batch.
+Scale: state is O(keys × k), held per ``hash(keys) % buckets`` state row
+by the Python-state kernel (:mod:`~my_cudf_spark.streaming.pystate`); the
+priority is computed JVM-side BEFORE the stateful op (one md5 + ln per row
+inside whole-stage codegen), so the bucket's fold only merges (priority,
+item) pairs already ≤ batch size, and emits ≤ k rows per updated key per
+batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
-from typing import Any, Iterator
+from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_cudf_spark.operators.sampling import es_priority, grouped_topn
-from my_cudf_spark.streaming.stateful import _norm_nullable, _plain_list
+from my_cudf_spark.streaming.pystate import bucket, frame, python_state
 
 __all__ = ["weighted_reservoir"]
 
@@ -45,7 +47,7 @@ def weighted_reservoir(
     weight_col: str,
     k: int,
     salt: str = "res",
-    buckets: int | None = None,
+    buckets: int = 8,
 ) -> DataFrame:
     """Per-key weighted reservoir of size ``k`` (without replacement,
     inclusion ∝ weight), exact across micro-batches.
@@ -63,13 +65,15 @@ def weighted_reservoir(
     ``grouped_topn`` (never a whole-key sort in one task), which is the
     oracle for the stream's final state.
 
-    ``buckets``: key the state store on ``hash(keys) % buckets`` instead
-    of the raw key — one vectorized pandas invocation per bucket per batch
-    instead of one per key (the high-cardinality lever every stateful op
-    here carries; state stays O(keys × k) either way).  Same output,
-    same oracle.
+    ``buckets``: the state store is keyed on ``hash(keys) % buckets``
+    (:func:`~my_cudf_spark.streaming.pystate.bucket`), so a micro-batch
+    pays one vectorized pandas fold per bucket, not one Python call per
+    key; state stays O(keys × k) whatever the count.
     """
     keys = list(keys)
+    if k < 1:
+        raise ValueError("k must be positive")
+    bkt = bucket(keys, buckets)
     qualified = df.filter(
         F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
     ).withColumn("__prio", es_priority([item_col], weight_col, salt))
@@ -94,151 +98,46 @@ def weighted_reservoir(
             "n_seen",
         )
 
-    if buckets is not None:
-        return _weighted_reservoir_bucketed(qualified, keys, item_col, k, buckets)
-
-    key_fields = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in keys
-    )
-    out_schema = (
-        f"{key_fields}, rank int, item bigint, priority double, n_seen bigint"
-    )
-    state_schema = "prios array<double>, items array<bigint>, n bigint"
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            prios_s, items_s, n = state.get
-            prios, items = list(prios_s), list(items_s)
-        else:
-            prios, items, n = [], [], 0
-        for pdf in pdfs:
-            n += len(pdf)
-            prios.extend(float(p) for p in pdf["__prio"])
-            items.extend(int(i) for i in pdf[item_col])
-        order = sorted(range(len(prios)), key=lambda i: (prios[i], items[i]))[:k]
-        prios = [prios[i] for i in order]
-        items = [items[i] for i in order]
-        state.update((prios, items, n))
-        base = dict(zip(keys, key))
-        yield pd.DataFrame(
-            [
-                base | {"rank": r + 1, "item": items[r], "priority": prios[r], "n_seen": n}
-                for r in range(len(items))
-            ]
-        )
-
-    return qualified.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _weighted_reservoir_bucketed(
-    qualified: DataFrame,
-    keys: list[str],
-    item_col: str,
-    k: int,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed reservoir: state keyed on ``hash(keys) % buckets``; one
-    vectorized pandas merge per bucket per batch.  State = the bucket's
-    kept reservoir rows plus per-key seen counts, as parallel arrays
-    (positional ``c{i}`` names — immune to column-name collisions);
-    ``_norm_nullable`` keeps NULL-bearing key dtypes merge-stable (the
-    r5/r6 bucketed-state lesson)."""
-    if buckets < 1:
-        raise ValueError("buckets must be positive")
-    if k < 1:
-        raise ValueError("k must be positive")
     typ = {f.name: f.dataType.simpleString() for f in qualified.schema.fields}
-    key_fields = ", ".join(f"{c} {typ[c]}" for c in keys)
-    out_schema = (
-        f"{key_fields}, rank int, item bigint, priority double, n_seen bigint"
-    )
-    res_cols = [*keys, "__prio", item_col]
-    state_schema = (
-        ", ".join(f"c{i} array<{typ[c]}>" for i, c in enumerate(res_cols))
-        + ", "
-        + ", ".join(f"m{i} array<{typ[c]}>" for i, c in enumerate(keys))
-        + ", n array<bigint>"
-    )
-    res_types = {c: typ[c] for c in res_cols}
-    cnt_types = {**{c: typ[c] for c in keys}, "n": "bigint"}
+    typ["__n"] = "bigint"
+    # state = the bucket's kept reservoir rows, each carrying its key's
+    # seen count, as parallel arrays (positional names: immune to
+    # column-name collisions)
+    cols = [*keys, "__prio", item_col, "__n"]
+    state_schema = ", ".join(f"c{i} array<{typ[c]}>" for i, c in enumerate(cols))
 
-    def update(
-        _bkt: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        res_frames, cnt_prev = [], None
-        if state.exists:
-            arrays = state.get
-            nres = len(res_cols)
-            res_frames.append(
-                _norm_nullable(
-                    pd.DataFrame({c: arrays[i] for i, c in enumerate(res_cols)}),
-                    res_types,
-                )
-            )
-            cnt_prev = _norm_nullable(
-                pd.DataFrame(
-                    {c: arrays[nres + i] for i, c in enumerate(keys)}
-                    | {"n": arrays[nres + len(keys)]}
-                ),
-                cnt_types,
-            )
-        batch = [pdf[res_cols] for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(
-                columns=[*keys, "rank", "item", "priority", "n_seen"]
-            )
-            return
-        batch_pdf = _norm_nullable(pd.concat(batch, ignore_index=True), res_types)
-
-        # per-key counts: previous + this batch (dropna=False keeps NULL keys)
-        cnt_new = (
-            batch_pdf.groupby(keys, dropna=False, as_index=False)
-            .size()
-            .rename(columns={"size": "n"})
+    def step(_bkt, state, new):
+        old = frame(cols, state, typ)
+        allf = pd.concat(
+            [old, frame(cols[:-1], [new[c] for c in cols[:-1]], typ)],
+            ignore_index=True,
         )
-        cnt_new = _norm_nullable(cnt_new, cnt_types)
-        cnt = pd.concat([f for f in (cnt_prev, cnt_new) if f is not None])
-        cnt = cnt.groupby(keys, dropna=False, as_index=False)["n"].sum()
-        cnt = _norm_nullable(cnt, cnt_types)
-
+        # one code per key; dropna=False makes a NULL key a key
+        code = allf.groupby(keys, dropna=False, sort=False).ngroup().to_numpy()
+        n = np.zeros(code.max() + 1, dtype=np.int64)
+        n[code[: len(old)]] = old["__n"].to_numpy(np.int64)
+        n += np.bincount(code[len(old) :], minlength=len(n))
+        touched = np.zeros(len(n), dtype=bool)
+        touched[code[len(old) :]] = True
         # reservoir: k smallest (prio, item) per key over state ∪ batch
-        allf = pd.concat([*res_frames, batch_pdf], ignore_index=True)
-        allf = allf.sort_values(["__prio", item_col], kind="mergesort")
-        kept = allf.groupby(keys, dropna=False).head(k)
-        state.update(
-            tuple(_plain_list(kept[c]) for c in res_cols)
-            + tuple(_plain_list(cnt[c]) for c in keys)
-            + (_plain_list(cnt["n"]),)
+        allf["__code"] = code
+        kept = (
+            allf.sort_values(["__prio", item_col], kind="mergesort")
+            .groupby("__code", sort=False)
+            .head(k)
         )
-        touched = batch_pdf[keys].drop_duplicates()
-        out = kept.merge(touched, on=keys)
-        out = out.sort_values(["__prio", item_col], kind="mergesort")
-        out["rank"] = out.groupby(keys, dropna=False).cumcount() + 1
-        out = out.merge(cnt, on=keys)
-        out = out.rename(columns={item_col: "item", "__prio": "priority", "n": "n_seen"})
-        yield out[[*keys, "rank", "item", "priority", "n_seen"]]
+        kept = kept.assign(__n=n[kept["__code"]])
+        out = kept[touched[kept["__code"]]]
+        out = out.assign(rank=out.groupby("__code").cumcount() + 1).rename(
+            columns={item_col: "item", "__prio": "priority", "__n": "n_seen"}
+        )
+        return [kept[c] for c in cols], out[[*keys, "rank", "item", "priority", "n_seen"]]
 
-    bucket = F.pmod(F.hash(*[F.col(c) for c in keys]), F.lit(buckets))
-    return (
-        qualified.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return python_state(
+        qualified.withColumn("__bkt", bkt),
+        ["__bkt"],
+        state_schema,
+        ", ".join(f"{c} {typ[c]}" for c in keys)
+        + ", rank int, item bigint, priority double, n_seen bigint",
+        step,
     )

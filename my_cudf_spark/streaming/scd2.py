@@ -47,14 +47,12 @@ arrives between, which delta emission cannot retract).
 from __future__ import annotations
 
 from collections.abc import Sequence
-from typing import Any, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from my_cudf_spark.streaming.stateful import _norm_nullable, _plain_list
+from my_cudf_spark.streaming.pystate import bucket, frame, python_state
 
 __all__ = ["scd2_history"]
 
@@ -83,6 +81,7 @@ def scd2_history(
     for the drained stream."""
     keys = list(keys)
     attr_cols = list(attr_cols)
+    bkt = bucket(keys, buckets)
     if not df.isStreaming:
         from pyspark.sql import Window
 
@@ -106,8 +105,6 @@ def scd2_history(
             F.col("n_events").cast("long").alias("n_events"),
         )
 
-    if buckets < 1:
-        raise ValueError("buckets must be positive")
     typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     cols = [*keys, eff_col, *attr_cols]
     out_cols = [*keys, *attr_cols, "valid_from", "valid_to", "is_current", "n_events"]
@@ -124,29 +121,10 @@ def scd2_history(
     def _null_safe_eq(a: pd.Series, b: pd.Series) -> pd.Series:
         return (a.eq(b) | (a.isna() & b.isna())).fillna(False).astype(bool)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        col_types = {c: typ[c] for c in cols}
-        frames = []
-        if state.exists:
-            arrays = state.get
-            frames.append(
-                _norm_nullable(
-                    pd.DataFrame({c: arrays[i] for i, c in enumerate(cols)}),
-                    col_types,
-                )
-            )
-        batch = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=out_cols)
-            return
-        batch_pdf = _norm_nullable(pd.concat(batch, ignore_index=True), col_types)
-        frames.append(batch_pdf)
+    def step(_bkt, state, new):
+        batch = frame(cols, [new[c] for c in cols], typ)
         allf = (
-            pd.concat(frames, ignore_index=True)
+            pd.concat([frame(cols, state, typ), batch], ignore_index=True)
             .drop_duplicates(cols)  # exact redelivery collapses
             .sort_values([*keys, eff_col], kind="mergesort")
             .reset_index(drop=True)
@@ -157,7 +135,6 @@ def scd2_history(
                 "effective time with different attributes — fold order "
                 "undefined (pre-compact the feed, e.g. apply_changelog)"
             )
-        state.update(tuple(_plain_list(allf[c]) for c in cols))
 
         # consecutive-equal-attr collapse (null-safe, against the
         # ORIGINAL previous event — equality is transitive within runs)
@@ -186,20 +163,10 @@ def scd2_history(
             .reset_index()
         )
         kept = kept.merge(n_ev, on=keys)
-        touched = batch_pdf[keys].drop_duplicates()
-        out = kept.merge(touched, on=keys)
+        out = kept.merge(batch[keys].drop_duplicates(), on=keys)
         out["n_events"] = out["n_events"].astype("int64")
-        yield out[out_cols]
+        return [allf[c] for c in cols], out[out_cols]
 
-    bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets))
-    return (
-        df.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return python_state(
+        df.withColumn("__bkt", bkt), ["__bkt"], state_schema, out_schema, step
     )

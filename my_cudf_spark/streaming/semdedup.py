@@ -47,16 +47,15 @@ computed as a sequential-fold Column expression instead
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
-from typing import Any, Iterator
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_cudf_spark.operators.similarity import dot, l2_norm
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = [
     "cell_assign_expr",
@@ -219,6 +218,7 @@ def stream_semantic_dedup(
     for the streamed final state."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
+    bkt = bucket([cell_col], buckets)
     typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     if not df.isStreaming:
         a = df.select(
@@ -260,114 +260,65 @@ def stream_semantic_dedup(
         )
 
     id_type = typ[id_col]
-    out_schema = f"cell int, id {id_type}, keep boolean, ver bigint"
-    state_schema = (
-        f"cells array<int>, ids array<{id_type}>, flat array<double>,"
-        " norms array<double>, keeps array<boolean>, dim int, ver bigint"
-    )
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cells, ids, flat, norms, keeps, dim, ver = state.get
-            cells = list(cells)
-            ids = list(ids)
-            norms = np.asarray(norms, dtype=np.float64)
-            keeps = list(keeps)
-            V = np.asarray(flat, dtype=np.float64).reshape(-1, dim) if dim else None
-        else:
-            cells, ids, keeps = [], [], []
-            norms = np.empty(0)
-            V = None
-            dim, ver = 0, 0
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["cell", "id", "keep", "ver"])
-            return
-        b = pd.concat(batch, ignore_index=True).sort_values([cell_col, id_col])
-        ver += 1
-        out_rows: list[dict] = []
-        cell_arr = np.asarray(cells)
-        id_arr = np.asarray(ids)
-        for cell, grp in b.groupby(cell_col, sort=True):
-            cell = int(cell)
+    def step(_bkt, state, new):
+        cells, ids, flat, norms, keeps, dim, ver = state
+        dim, ver = dim or 0, (ver or 0) + 1
+        V = flat.reshape(-1, dim) if dim else None
+        out: list[pd.DataFrame] = []
+        for cell, grp in new.sort_values([cell_col, id_col]).groupby(cell_col, sort=True):
             new_ids = grp[id_col].to_numpy()
-            NV = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in grp[vec_col]]
-            )
-            if dim == 0:
+            NV = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+            if V is None:
                 dim = NV.shape[1]
                 V = np.empty((0, dim))
             new_norms = np.sqrt((NV * NV).sum(axis=1))
-            old_idx = (
-                np.nonzero(cell_arr == cell)[0] if len(cell_arr) else np.empty(0, int)
-            )
-            OV = V[old_idx] if len(old_idx) else np.empty((0, dim))
-            o_norms = norms[old_idx] if len(old_idx) else np.empty(0)
-            o_ids = id_arr[old_idx] if len(old_idx) else np.empty(0, dtype=new_ids.dtype)
+            old_idx = np.nonzero(cells == cell)[0]
+            o_ids = ids[old_idx]
             # new × (old + new) cosines — the only quadratic, cell-bounded
-            AV = np.concatenate([OV, NV])
-            a_norms = np.concatenate([o_norms, new_norms])
             a_ids = np.concatenate([o_ids, new_ids])
-            cos = (NV @ AV.T) / np.outer(new_norms, a_norms)
+            cos = (NV @ np.concatenate([V[old_idx], NV]).T) / np.outer(
+                new_norms, np.concatenate([norms[old_idx], new_norms])
+            )
             near = cos >= threshold
-            lower = a_ids[None, :] < new_ids[:, None]
             # keep(new i) ⇔ no lower-id near neighbor among all seen
-            new_keep = ~(near & lower).any(axis=1)
-            for i, nid in enumerate(new_ids):
-                out_rows.append(
-                    {"cell": cell, "id": nid, "keep": bool(new_keep[i]), "ver": ver}
-                )
+            new_keep = ~(near & (a_ids[None, :] < new_ids[:, None])).any(axis=1)
             # revocation: an old kept row with a NEW lower-id near neighbor
-            if len(old_idx):
-                kills = near[:, : len(old_idx)] & (
-                    new_ids[:, None] < o_ids[None, :]
+            kills = near[:, : len(old_idx)] & (new_ids[:, None] < o_ids[None, :])
+            revoked = old_idx[kills.any(axis=0) & keeps[old_idx]]
+            keeps[revoked] = False
+            out.append(
+                pd.DataFrame(
+                    {
+                        "cell": cell,
+                        "id": np.concatenate([new_ids, ids[revoked]]),
+                        "keep": np.concatenate(
+                            [new_keep, np.zeros(len(revoked), dtype=bool)]
+                        ),
+                        "ver": ver,
+                    }
                 )
-                for j_local in np.nonzero(kills.any(axis=0))[0]:
-                    j = old_idx[j_local]
-                    if keeps[j]:
-                        keeps[j] = False
-                        out_rows.append(
-                            {"cell": cell, "id": ids[j], "keep": False, "ver": ver}
-                        )
+            )
             # append new rows to state
-            cells.extend([cell] * len(new_ids))
-            ids.extend(new_ids.tolist())
+            cells = np.concatenate([cells, np.full(len(new_ids), cell, dtype=np.int32)])
+            ids = np.concatenate([ids, new_ids])
             V = np.concatenate([V, NV])
             norms = np.concatenate([norms, new_norms])
-            keeps.extend(bool(k) for k in new_keep)
-            cell_arr = np.asarray(cells)
-            id_arr = np.asarray(ids)
-        state.update(
-            (
-                cells,
-                ids,
-                V.reshape(-1).tolist(),
-                norms.tolist(),
-                keeps,
-                dim,
-                ver,
-            )
+            keeps = np.concatenate([keeps, new_keep])
+        return (
+            (cells, ids, V.reshape(-1), norms, keeps, dim, ver),
+            pd.concat(out, ignore_index=True),
         )
-        yield pd.DataFrame(out_rows, columns=["cell", "id", "keep", "ver"])
 
-    bucket = F.pmod(F.hash(F.col(cell_col)), F.lit(buckets))
-    return (
+    return python_state(
         df.select(
             F.col(cell_col).cast("int").alias(cell_col),
             F.col(id_col),
             F.col(vec_col),
-        )
-        .withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ).withColumn("__bkt", bkt),
+        ["__bkt"],
+        f"cells array<int>, ids array<{id_type}>, flat array<double>,"
+        " norms array<double>, keeps array<boolean>, dim int, ver bigint",
+        f"cell int, id {id_type}, keep boolean, ver bigint",
+        step,
     )

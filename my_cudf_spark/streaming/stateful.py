@@ -20,50 +20,18 @@ store, partial aggregation map-side, no Python worker:
 Each emits the keys a micro-batch touched with their cumulative value, and
 the identical plan on a batch frame is the oracle for the stream's final
 state (``latest_state`` and ``heavy_hitters`` keep exact ``row_number``
-batch twins)."""
+batch twins).
+
+State that is not an aggregate (reservoirs, version histories, inverted
+indexes) runs through the one Python-state kernel,
+:mod:`~my_cudf_spark.streaming.pystate`."""
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-# Arrow → pandas turns a NULL-bearing int64 column into float64/object,
-# so a bucketed update that merges state rows (int lists from GroupState)
-# against batch keys (floats) would raise on mismatched merge dtypes or
-# fail to encode state arrays typed array<bigint>.  Normalizing BOTH
-# frames to the pandas nullable dtype derived from the SPARK type keeps
-# merge/groupby keys comparable and NULL keys representable — the bucketed
-# Python-state paths (scd2, reservoir) then accept the same input domain
-# as the per-key paths.
-_PD_NULLABLE = {
-    "tinyint": "Int8",
-    "smallint": "Int16",
-    "int": "Int32",
-    "bigint": "Int64",
-    "boolean": "boolean",
-    "string": "string",
-}
-
-
-def _norm_nullable(pdf: pd.DataFrame, types: dict[str, str]) -> pd.DataFrame:
-    """Cast columns to their Spark-type-derived pandas nullable dtype
-    (see _PD_NULLABLE); non-mapped types (double, timestamp…) pass
-    through — their pandas representation is already null-stable."""
-    for c, t in types.items():
-        want = _PD_NULLABLE.get(t)
-        if want is not None and str(pdf[c].dtype) != want:
-            pdf[c] = pdf[c].astype(want)
-    return pdf
-
-
-def _plain_list(s: pd.Series) -> list:
-    """Series → list with NA scalars as None (the Arrow state encoder
-    accepts None, never pd.NA/NaN, inside typed state arrays)."""
-    return [None if pd.isna(v) else v for v in s.tolist()]
 
 
 def running_totals(

@@ -50,13 +50,11 @@ the stateful op — the Python state function only merges (hash, id) pairs.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-from typing import Any, Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from my_cudf_spark.streaming.pystate import bucket, python_state
 
 __all__ = ["shingle_hashes", "stream_substring_dedup"]
 
@@ -107,6 +105,7 @@ def stream_substring_dedup(
     for the streamed final state."""
     if min_len < 1 or max_df < 2:
         raise ValueError("need min_len >= 1 and max_df >= 2")
+    bkt = bucket(["__h"], buckets)
 
     if not df.isStreaming:
         from my_cudf_spark.operators.sampling import grouped_topn
@@ -139,35 +138,17 @@ def stream_substring_dedup(
             "id", (~F.coalesce(F.col("__dropped"), F.lit(False))).alias("keep")
         )
 
-    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    id_type = typ[id_col]
-    out_schema = f"id {id_type}, keep boolean"
-    state_schema = "hs array<long>, ids array<long>, hot array<long>"
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hs, ids, hot = (list(a) for a in state.get)
-        else:
-            hs, ids, hot = [], [], []
-        batch = [pdf for pdf in pdfs if len(pdf)]
-        if not batch:
-            yield pd.DataFrame(columns=["id", "keep"])
-            return
-        new = pd.concat(batch, ignore_index=True)
+    def step(_bkt, state, new):
+        hs, ids, hot = state
         postings: dict[int, list[int]] = {}
-        for h, i in zip(hs, ids):
-            postings.setdefault(int(h), []).append(int(i))
-        hotset = set(int(h) for h in hot)
+        for h, i in zip(hs.tolist(), ids.tolist()):
+            postings.setdefault(h, []).append(i)
+        hotset = set(hot.tolist())
         out: dict[int, bool] = {}
         # ascending id order makes the posting-rank rule exact for
         # multi-doc batches (a batch is ingested as if id-ordered)
         new = new.sort_values(id_col)
-        for b, h in zip(new[id_col].astype("int64"), new["__h"].astype("int64")):
-            b, h = int(b), int(h)
+        for b, h in zip(new[id_col].tolist(), new["__h"].tolist()):
             out.setdefault(b, True)
             if h in hotset:
                 continue
@@ -186,13 +167,12 @@ def stream_substring_dedup(
                 if a > b:
                     out[a] = False  # revocation: late lower id wins
             plist.append(b)
-        hs, ids = [], []
-        for h, plist in postings.items():
-            for a in plist:
-                hs.append(h)
-                ids.append(a)
-        state.update((hs, ids, sorted(hotset)))
-        yield pd.DataFrame({"id": list(out.keys()), "keep": list(out.values())})
+        hs = [h for h, plist in postings.items() for _ in plist]
+        ids = [a for plist in postings.values() for a in plist]
+        return (
+            (hs, ids, sorted(hotset)),
+            pd.DataFrame({"id": list(out), "keep": list(out.values())}),
+        )
 
     # explode_outer + post-filter: see the batch branch above — avoids the
     # inferred size()-filter inlining the md5 shingle pipeline per batch.
@@ -200,15 +180,10 @@ def stream_substring_dedup(
         F.col(id_col),
         F.explode_outer(shingle_hashes(F.col(tokens_col), min_len)).alias("__h"),
     ).filter(F.col("__h").isNotNull())
-    bucket = F.pmod(F.hash(F.col("__h")), F.lit(buckets))
-    return (
-        sh.withColumn("__bkt", bucket)
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return python_state(
+        sh.withColumn("__bkt", bkt),
+        ["__bkt"],
+        "hs array<long>, ids array<long>, hot array<long>",
+        f"id {df.schema[id_col].dataType.simpleString()}, keep boolean",
+        step,
     )

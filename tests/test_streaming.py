@@ -900,38 +900,9 @@ def test_weighted_reservoir_drops_weightless_rows(spark):
     assert out[0]["item"] == 1 and out[0]["n_seen"] == 1
 
 
-def test_weighted_reservoir_bucketed_equals_per_key(spark):
-    """The bucketed (high-cardinality) state path lands on the same final
-    reservoirs as the per-key path."""
-    from pyspark.sql import Window
-
-    from my_cudf_spark.streaming.reservoir import weighted_reservoir
-
-    def final(buckets, tag):
-        stream, work_dir = replay_events(spark, SF_DIR, num_chunks=4)
-        try:
-            res = weighted_reservoir(
-                stream, ["event_type"], "event_id", "value", k=5, buckets=buckets
-            )
-            drained = S.run_to_memory(res, tag, output_mode="update")
-            w = Window.partitionBy("event_type", "rank").orderBy(
-                F.desc("n_seen"), F.asc("priority"), F.asc("item")
-            )
-            return _rows(
-                drained.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn"),
-                ["event_type", "rank"],
-            )
-        finally:
-            shutil.rmtree(work_dir, ignore_errors=True)
-
-    assert final(None, "res_pk") == final(4, "res_bk")
-
-
 def test_weighted_reservoir_bucketed_null_keys(spark):
-    """NULL group keys flow through the bucketed reservoir exactly as
-    through the per-key path (the _norm_nullable contract)."""
+    """NULL group keys keep their own bucketed reservoir, and the drained
+    stream equals the batch draw (the nullable-dtype state contract)."""
     import tempfile
 
     import pyarrow as pa
@@ -947,7 +918,7 @@ def test_weighted_reservoir_bucketed_null_keys(spark):
         {"k": [None, None, 1], "event_id": [4, 5, 6], "value": [1.0, None, 4.0]},
     ]
 
-    def final(buckets, tag):
+    def final(tag):
         work_dir = tempfile.mkdtemp(prefix="res_nullkey_")
         _write_chunks(work_dir, schema, chunks)
         stream = (
@@ -956,9 +927,7 @@ def test_weighted_reservoir_bucketed_null_keys(spark):
             .parquet(work_dir)
         )
         try:
-            res = weighted_reservoir(
-                stream, ["k"], "event_id", "value", k=2, buckets=buckets
-            )
+            res = weighted_reservoir(stream, ["k"], "event_id", "value", k=2, buckets=2)
             drained = S.run_to_memory(res, tag, output_mode="update")
             w = Window.partitionBy("k", "rank").orderBy(
                 F.desc("n_seen"), F.asc("priority"), F.asc("item")
@@ -972,8 +941,7 @@ def test_weighted_reservoir_bucketed_null_keys(spark):
         finally:
             shutil.rmtree(work_dir, ignore_errors=True)
 
-    rows = final(2, "res_nk_bk")
-    assert rows == final(None, "res_nk_pk")
+    rows = final("res_nk_bk")
     # NULL key kept its own reservoir; event 5 (NULL weight) carried no mass
     null_rows = [r for r in rows if r[0] is None]
     assert {r[2] for r in null_rows} == {2, 4} and null_rows[0][4] == 2
@@ -1388,24 +1356,8 @@ def test_stream_ivm_chunking_invariant(spark):
     assert a == b
 
 
-class _FakeGroupState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_stream_funnel_seal_lag_compacts_exactly():
-    """Driving the per-bucket update function directly with time-ordered
+def test_stream_funnel_seal_lag_compacts_exactly(spark):
+    """Driving the per-bucket fold directly with time-ordered
     batches (the file-replay harness delivers chunks in arbitrary order,
     which a bounded seal_lag by contract does not cover): the seal
     compaction folds old events into a (stage, since, count) base, STATE
@@ -1413,7 +1365,8 @@ def test_stream_funnel_seal_lag_compacts_exactly():
     left-fold split is exact when lateness stays within the lag."""
     import pandas as pd
 
-    from my_cudf_spark.streaming.funnel import _make_update
+    from my_cudf_spark.streaming.funnel import STATE, _make_step
+    from my_cudf_spark.streaming.pystate import empty_state
 
     # 40 random-ish funnel events for 4 users over ts 0..4000, delivered
     # in 4 time-ordered chunks with ±50 intra-chunk disorder
@@ -1430,17 +1383,17 @@ def test_stream_funnel_seal_lag_compacts_exactly():
                rows[n // 2 : 3 * n // 4], rows[3 * n // 4 :]]
 
     def run(seal_lag):
-        upd = _make_update(3, seal_lag)
-        state = _FakeGroupState()
+        step = _make_step(3, seal_lag)
+        state = empty_state(STATE)
         snap = {}
         for b in batches:
             pdf = pd.DataFrame(b, columns=["__u", "__ts", "__eid", "__step"])
-            for out in upd((0,), [pdf], state):
-                for r in out.itertuples(index=False):
-                    prev = snap.get(r.user)
-                    if prev is None or r.version > prev[1]:
-                        snap[r.user] = (int(r.stage), int(r.version))
-        live_events = len(state.get[4])
+            state, out = step((0,), state, pdf)
+            for r in out.itertuples(index=False):
+                prev = snap.get(r.user)
+                if prev is None or r.version > prev[1]:
+                    snap[r.user] = (int(r.stage), int(r.version))
+        live_events = len(state[4])
         return snap, live_events
 
     sealed, live_sealed = run(200)
@@ -1600,23 +1553,122 @@ def test_aggregate_shaped_state_is_native_aggregation(spark, tmp_path):
         assert "TransformWithStateInPandas" not in plan, name
 
 
-@pytest.mark.parametrize("op", ["heavy_hitters", "quantile_digest"])
+def test_python_state_has_one_call_site():
+    """applyInPandasWithState is called, and GroupState imported, only by
+    the Python-state kernel: every other stateful operator supplies a fold
+    to streaming.pystate.python_state."""
+    import ast
+    import pathlib
+
+    import my_cudf_spark
+
+    root = pathlib.Path(my_cudf_spark.__file__).parent
+    calls, imports = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        mod = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "applyInPandasWithState":
+                    calls.add(mod)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                if any(a.name.split(".")[-1] == "GroupState" for a in node.names):
+                    imports.add(mod)
+    assert calls == {"streaming/pystate.py"}
+    assert imports == {"streaming/pystate.py"}
+
+
+def _bucketed_ops():
+    from my_cudf_spark.streaming.annindex import stream_ann_index
+    from my_cudf_spark.streaming.decontam import stream_bloom_decontam
+    from my_cudf_spark.streaming.funnel import stream_funnel
+    from my_cudf_spark.streaming.minhashdd import stream_lsh_dedup
+    from my_cudf_spark.streaming.phash import stream_phash_dedup
+    from my_cudf_spark.streaming.pretrain import stream_exact_dedup_min
+    from my_cudf_spark.streaming.semdedup import stream_semantic_dedup
+    from my_cudf_spark.streaming.substring import stream_substring_dedup
+
+    return {
+        "ann_index": lambda df, b: stream_ann_index(df, "id", "cell", buckets=b),
+        "bloom_decontam": lambda df, b: stream_bloom_decontam(
+            df, "id", "toks", "is_bench", buckets=b
+        ),
+        "exact_dedup_min": lambda df, b: stream_exact_dedup_min(df, "id", "h", buckets=b),
+        "funnel": lambda df, b: stream_funnel(df, "user", "ts", "id", "type", buckets=b),
+        "lsh_dedup": lambda df, b: stream_lsh_dedup(
+            df, "id", "sigs", bands=2, rows=2, min_matches=2, buckets=b
+        ),
+        "phash_dedup": lambda df, b: stream_phash_dedup(df, "id", "sig", buckets=b),
+        "semantic_dedup": lambda df, b: stream_semantic_dedup(
+            df, "id", "vec", "cell", 0.9, buckets=b
+        ),
+        "substring_dedup": lambda df, b: stream_substring_dedup(
+            df, "id", "toks", buckets=b
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "ann_index",
+        "bloom_decontam",
+        "exact_dedup_min",
+        "funnel",
+        "lsh_dedup",
+        "phash_dedup",
+        "semantic_dedup",
+        "substring_dedup",
+    ],
+)
+def test_bucketed_operator_rejects_bad_bucket_count(spark, tmp_path, op):
+    """A bucket count below 1 fails while the plan is built (ANSI
+    ``pmod(x, 0)`` would otherwise raise inside the first micro-batch, and
+    a negative count would run silently); no stream is started."""
+    stream = spark.readStream.schema(
+        "id long, sig long, sigs array<long>, toks array<string>,"
+        " is_bench boolean, vec array<double>, cell int, user long,"
+        " ts timestamp, type string, h string"
+    ).parquet(str(tmp_path))
+    for buckets in (0, -3):
+        with pytest.raises(ValueError, match="buckets must be positive"):
+            _bucketed_ops()[op](stream, buckets)
+    assert spark.streams.active == []
+
+
+_RESTART_OPS = ["heavy_hitters", "quantile_digest", "weighted_reservoir", "scd2_history"]
+
+
+@pytest.mark.parametrize("op", _RESTART_OPS)
 def test_sketch_state_survives_restart(spark, tmp_path, op):
     """Drain 2 of 4 chunks with a durable checkpoint, stop, add the other
     2 chunks and restart: the final per-key snapshot equals the batch
-    answer, and the state store holds exactly one row per key."""
+    answer, and the state store holds exactly one row per state key — per
+    group key for native aggregation state, per occupied bucket for
+    Python state."""
     import pyarrow as pa
 
+    from my_cudf_spark.streaming.pystate import bucket
     from my_cudf_spark.streaming.quantiles import quantile_digest
+    from my_cudf_spark.streaming.reservoir import weighted_reservoir
+    from my_cudf_spark.streaming.scd2 import scd2_history
     from my_cudf_spark.streaming.stateful import heavy_hitters
 
     def build(df):
         if op == "heavy_hitters":
             return heavy_hitters(df, ["k"], "item", k=3, capacity=8)
-        return quantile_digest(df, ["k"], "v", qs=[0.5, 0.9])
+        if op == "quantile_digest":
+            return quantile_digest(df, ["k"], "v", qs=[0.5, 0.9])
+        if op == "weighted_reservoir":
+            return weighted_reservoir(df, ["k"], "id", "v", k=3, buckets=3)
+        return scd2_history(df, ["k"], ["item"], "id", buckets=3)
 
-    rows = [(i % 5, "abcdef"[(i * i) % 6], float((i * 37) % 101)) for i in range(200)]
-    schema = pa.schema([("k", pa.int64()), ("item", pa.string()), ("v", pa.float64())])
+    rows = [
+        (i % 5, "abcdef"[(i * i) % 6], float((i * 37) % 101), i) for i in range(200)
+    ]
+    ddl = "k long, item string, v double, id long"
+    schema = pa.schema(
+        [("k", pa.int64()), ("item", pa.string()), ("v", pa.float64()), ("id", pa.int64())]
+    )
     chunks = [
         dict(zip(schema.names, map(list, zip(*rows[i : i + 50]))))
         for i in range(0, 200, 50)
@@ -1636,7 +1688,7 @@ def test_sketch_state_survives_restart(spark, tmp_path, op):
 
     def drain():
         stream = (
-            spark.readStream.schema("k long, item string, v double")
+            spark.readStream.schema(ddl)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(data_dir))
         )
@@ -1658,9 +1710,13 @@ def test_sketch_state_survives_restart(spark, tmp_path, op):
     assert batch_ids == [0, 1, 2, 3]
 
     final = sorted(r for key_rows in latest.values() for r in key_rows)
-    batch = build(spark.createDataFrame(rows, "k long, item string, v double"))
+    batch_df = spark.createDataFrame(rows, ddl)
+    batch = build(batch_df)
     assert final == sorted(tuple(r) for r in batch.collect())
-    assert spark.read.format("statestore").load(ckpt).count() == 5
+    state_rows = 5
+    if op in ("weighted_reservoir", "scd2_history"):
+        state_rows = batch_df.select(bucket(["k"], 3)).distinct().count()
+    assert spark.read.format("statestore").load(ckpt).count() == state_rows
 
 
 def test_stream_ann_index_chunking_invariant_matches_batch(spark):
