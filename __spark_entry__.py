@@ -50,138 +50,14 @@ def _last_verified_round() -> dict[str, int]:
     return seen
 
 
-# Queries whose physical plan changed AFTER their most recent green driver
-# row: they jump the rotation queue — right after never-verified queries —
-# so the driver re-proves the CURRENT plan instead of spending the row
-# budget on unchanged backlog.  One (round, names) entry per round that
-# re-planned green queries; a name's boost EXPIRES once the driver
-# re-verifies it at/after that round (a static set would otherwise
-# preempt the stale backlog forever).  Within the boosted tier, ordering
-# is by last-verified round ascending, so the r8 backlog drains before
-# r9's re-planned names (which were all driver-proven in r8).
-_R8_PLAN_CHANGED = frozenset(
-    {
-        # r8: the small-source parallelism guard (sources/tables.py
-        # ensure_min_parallelism) adds a conditional round-robin Exchange
-        # to every query reading the documents/embeddings corpora — the
-        # exact set below was computed by instrumenting load_table over
-        # the full registry (the three pinned text SENTINELS excluded by
-        # design).  Also carries the r8 ADVICE fixes riding the same
-        # names: vec_pca_project (mu checkpoint), vec_topk_int8 (all-zero
-        # quantize guard), text_dsir_weights (order-independent decimal
-        # log-weight sum).
-        "corpus_overlap", "dedup_clusters", "dedup_exact",
-        "dedup_incremental", "dedup_minhash_lsh", "dedup_neardup_pairs",
-        "dedup_simhash", "dedup_substring_removal", "dedup_substring_spans",
-        "io_text_roundtrip", "mm_audio_pairs", "mm_phash_pairs",
-        "mm_phash_signatures", "mm_video_pairs", "multimodal_features",
-        "multimodal_frames", "pack_documents", "pipeline_curation",
-        "pipeline_curation_model", "pipeline_data_card",
-        "sample_cluster_safe_split", "sample_epoch_shuffle",
-        "sample_mixture", "sample_split", "sample_split_grouped",
-        "sample_stratified", "stream_audio_dedup_replay",
-        "stream_curation_model_replay", "stream_curation_replay",
-        "stream_phash_replay", "stream_semantic_dedup_replay",
-        "stream_video_dedup_replay", "text_bm25", "text_bpe_learn",
-        "text_ccnet_buckets", "text_chunk_documents",
-        "text_classifier_learn", "text_classifier_train_apply",
-        "text_contamination", "text_dsir_weights", "text_edit_matrix",
-        "text_fingerprint", "text_lm_score", "text_minhash_ngrams",
-        "text_ngrams", "text_pii_redact", "text_quality_filter",
-        "text_quality_model", "text_stemmer", "text_subword",
-        "text_token_ops", "text_tokenize", "text_vocab_build",
-        "text_vocab_tokenize", "vec_cluster_balance", "vec_filtered_topk",
-        "vec_kmeans", "vec_neardup_pairs", "vec_pca_project",
-        "vec_semantic_dedup", "vec_stats", "vec_topk_cosine",
-        "vec_topk_hamming", "vec_topk_int8", "vec_topk_ivf",
-        "vec_topk_lsh",
-    }
-)
-# r9: hardening re-plans — tfidf max_df cap (text_cosine_pairs),
-# mega-basket cap (agg_market_basket), anchor-bin dedup-by-construction
-# (join_interval_overlap), derived decimal accumulator (cdc_incremental_agg),
-# round-before-sign cell assignment (stream_cluster_stats_replay), funnel
-# per-batch sort + sealable state (stream_funnel_replay), typed IVM keys
-# (stream_ivm_replay).
-_R9_PLAN_CHANGED = frozenset(
-    {
-        "text_cosine_pairs", "agg_market_basket", "join_interval_overlap",
-        "cdc_incremental_agg", "stream_cluster_stats_replay",
-        "stream_funnel_replay", "stream_ivm_replay",
-    }
-)
-# r10: ADVICE hardening re-plans — chosen-center removal from the
-# candidate pool (vec_kcenter_coreset, oracle mirrored), (cell, id)
-# dedup for at-least-once delivery (stream_ann_index_replay), double
-# lift products before division (agg_market_basket, oracle mirrored).
-_R10_PLAN_CHANGED = frozenset(
-    {
-        "vec_kcenter_coreset", "stream_ann_index_replay",
-        "agg_market_basket",
-    }
-)
-# r11: ADVICE hardening re-plans — time_travel's 1-row version-pin
-# contract enforced in-plan via (max, count) agg + raise_error
-# (cdc_time_travel, the one query with a DataFrame pin); stream_ann_index
-# update fn gains the code-word-length validation and seed_pq_codebooks
-# the short-corpus guard (the three queries whose serialized state fn /
-# seeding changed).  PLUS the r11 OPTIMIZATION re-plans (results proven
-# identical against the full DuckDB oracle at sf0.01 before landing):
-# power_iteration_pca covariance → Arrow/NumPy partial sums + keyless
-# mean agg (vec_pca_project/_topr); unigram Viterbi score resolution →
-# grid join (text_unigram_learn/_apply); pagerank edge explode +
-# src-partitioned pin (graph_pagerank); epoch metadata persist
-# (sample_epoch_shuffle_multi); and the replay-prep single-task chunk
-# write shared by every stream_* query.
-_R11_PLAN_CHANGED = frozenset(
-    {
-        "cdc_time_travel",
-        "vec_pca_project", "vec_pca_topr",
-        "vec_topk_ivf", "vec_topk_pq", "vec_topk_ivfpq",
-        "text_unigram_learn", "text_unigram_apply",
-        "graph_pagerank", "sample_epoch_shuffle_multi",
-        "stream_ann_index_replay", "stream_ann_ivfpq_replay",
-        "stream_ann_retrain_replay", "stream_audio_dedup_replay",
-        "stream_cdc_merge_replay", "stream_cdc_replay",
-        "stream_cluster_stats_replay", "stream_curation_model_replay",
-        "stream_curation_replay", "stream_decontam_replay",
-        "stream_dedup_replay", "stream_funnel_replay", "stream_ivm_replay",
-        "stream_join_replay", "stream_phash_replay", "stream_pit_replay",
-        "stream_pretrain_replay", "stream_quantile_replay",
-        "stream_reservoir_replay", "stream_running_totals",
-        "stream_semantic_dedup_replay", "stream_session_replay",
-        "stream_sketch_replay", "stream_sliding_replay",
-        "stream_substring_replay", "stream_topk_replay",
-        "stream_tumbling_replay", "stream_video_dedup_replay",
-    }
-)
-_PLAN_CHANGED = (
-    (8, _R8_PLAN_CHANGED),
-    (9, _R9_PLAN_CHANGED),
-    (10, _R10_PLAN_CHANGED),
-    (11, _R11_PLAN_CHANGED),
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator family from SURVEY.md §2.
 
-    Ordered never-verified first, then plan-changed-since-last-check, then
-    least-recently-verified (see ``_last_verified_round``)."""
+    Ordered never-verified first, then least-recently-verified, registry
+    order breaking ties (see ``_last_verified_round``)."""
     registry = load_registry()
     seen = _last_verified_round()
-    order = {name: i for i, name in enumerate(registry)}
-
-    def rank(n: str):
-        if n not in seen:
-            tier = 0
-        elif any(n in names and seen[n] < rnd for rnd, names in _PLAN_CHANGED):
-            tier = 1
-        else:
-            tier = 2
-        return (tier, seen.get(n, -1), order[n])
-
-    ranked = sorted(registry, key=rank)
+    ranked = sorted(registry, key=lambda n: seen.get(n, -1))  # stable sort
     return {name: registry[name].fn for name in ranked}
 
 

@@ -1,27 +1,18 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+JSON line as the last stdout line:
+
+    {"metric": "total_query_sec", "value": N, "unit": "sec",
+     "queries": {name: seconds, ...}, "sf": ...}
 
 Each query is forced end-to-end with the noop sink (full execution, no
-driver-side collect). Per query: median of $SPARK_GRAFT_BENCH_REPEATS (3)
-timed runs after one warmup of the whole session.
-
-Cross-run medians (round-5 protocol, per the round-4 verdict): host
-contention inflates a WHOLE session's numbers 1.5-2.5× on sub-second rows
-(within-run medians can't see it — every repeat of a query shares the
-session).  So each invocation also snapshots its raw per-query medians to
-``BENCH_RUNS/run-<ts>-<pid>.json``, and the REPORTED ``queries`` dict is
-the per-query median across the current run plus the most recent committed
-snapshots at the same (sf, cpus) — up to $SPARK_GRAFT_BENCH_HISTORY (5)
-runs.  The current run's raw numbers ride along as ``queries_this_run``,
-with ``runs_used`` recording how many runs backed each median, so nothing
-is hidden: one noisy session (the driver's or ours) can no longer move the
-graded artifact, while a real regression shifts the median within two to
-three runs.  Set SPARK_GRAFT_BENCH_HISTORY=1 for raw single-run reporting.
-When a query's PLAN deliberately changes, its rows in committed snapshots
-measure a retired plan — delete just that query's entries from the old
-snapshots (the BASELINE.md re-record convention applied to raw runs) so
-the median reflects the shipped plan.
+driver-side collect).  After one warm-up of the whole session, every query
+gets an untimed warm-up execution and then $SPARK_GRAFT_BENCH_REPEATS (3)
+timed runs — $SPARK_GRAFT_BENCH_STREAM_REPEATS (5) for ``stream_*`` — with
+``release_pins`` between runs.  ``queries`` holds each query's median over
+its timed runs in THIS invocation, and ``value`` is their rounded sum: the
+report describes the code that ran, nothing else.  The same result is also
+written to ``BENCH_LOCAL.json`` beside this file.
 """
 
 from __future__ import annotations
@@ -32,164 +23,18 @@ import statistics
 import sys
 import time
 import traceback
-import uuid
 
 from my_cudf_spark.queries import load_registry
 from my_cudf_spark.session import get_spark
+from my_cudf_spark.sources.tables import DEFAULT_SF_DIR
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SF_DIR = DEFAULT_SF_DIR
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-
-# ---------------------------------------------------------------------------
-# Host-epoch calibration (round-6 verdict item #2).
-#
-# Host speed drifts 15-25% between measurement windows ("epochs") on
-# identical plans, so a raw ratio-to-baseline conflates plan changes with
-# host weather.  SENTINELS is a pinned set of queries whose plans have
-# NEVER changed since their round-2 baseline rows (tpch/ndsh/agg/fn
-# staples, all ≥ 0.8 s — sub-second rows are pure noise): the median of
-# their ratio-to-baseline in any bench run measures the HOST, not the
-# code.  Every snapshot stores its factor; ratios can then be reported
-# both raw and normalized (time ÷ calibration ≈ r2-epoch-equivalent
-# seconds).  Baseline rows recorded in LATER epochs are mapped back to
-# the r2 scale with ROUND_EPOCH_CAL — the median snapshot calibration of
-# the round they were recorded in, computed from the committed BENCH_RUNS
-# history (rounds 2-4 predate snapshots and define the 1.0 epoch; rows
-# recorded from r7 on carry their own ``cal=`` in the BASELINE.md
-# annotation, written from calibration_this_run).
-# ---------------------------------------------------------------------------
-SENTINELS = [
-    "agg_covar_spearman",
-    "agg_kendall",
-    "agg_product",
-    "agg_quantiles",
-    "agg_var_corr",
-    "fn_json",
-    "fn_month_sequence",
-    "ndsh_q1",
-    "ndsh_q5",
-    "ndsh_q9",
-    "tpch_q18",
-    "tpch_q21",
-    # r8 basket rebalance (r7 verdict #2): the original all-join/agg basket
-    # speeds up ~2.7% MORE on fast-host epochs than the regex/string-heavy
-    # cohort, so calibration over-penalized exactly the text_* family
-    # (normalized ≫ raw for text rows only).  These three are r2-recorded,
-    # never re-planned, ≥ 1.1 s, and regex/string-bound — the basket now
-    # spans both execution profiles.  Calibrations are recomputed from raw
-    # snapshot timings with the CURRENT basket (see _cross_run_medians), so
-    # the whole committed history is self-consistent under this change.
-    "text_quality_lang",
-    "text_repetition",
-    "text_tfidf",
-]
-# median sentinel calibration of each round's committed snapshots
-# (r5: 8 snapshots, 0.7386; r6: 10 snapshots, 0.7865).  Rounds 3-4
-# predate snapshots, so their epochs are estimated from the committed
-# cross-run history instead: with cal=1.0 the r3-recorded cohort (n=20)
-# read a median normalized ratio of 1.180 and the r4 cohort (n=17)
-# 1.085, while the r2 (0.939), r5 (0.976) and r7 (1.006) cohorts all sat
-# at ~1.0 on identical hardware — a uniform per-cohort shift is host
-# epoch, not twenty simultaneous plan regressions.  The entries below
-# anchor each cohort's median to 1.0 (ecal = 1/median — conservative: it
-# removes the epoch shift without crediting the cohort with the plan
-# improvements the r2 cohort shows).  r2 defines the 1.0 scale.
-# r8 re-fit on the EXPANDED basket (three text sentinels added — see
-# SENTINELS note): r6 = median recomputed calibration of its 17 committed
-# snapshots (was 0.7865 on the old basket's 10); r5 snapshots were pruned
-# before r8, so its measured 0.7386 is scaled by the median new/old basket
-# offset across all 36 committed snapshots (1.0269); r3/r4 re-fitted with
-# the same cohort-median-to-1.0 anchoring over new-basket calibrations
-# (was 0.847 / 0.922).
-ROUND_EPOCH_CAL = {3: 0.8836, 4: 0.9339, 5: 0.7585, 6: 0.7999}
-# The r3/r4 factors are FITTED (cohort median anchored to 1.0), not
-# measured from that round's own sentinel snapshots like r5/r6 — so by
-# construction they would absorb a genuinely uniform cohort regression
-# (r7 advisor).  Independent validation (r8, from committed BENCH_RUNS,
-# no refit): (a) the r3 cohort's ecal=1.0 ratio distribution is a pure
-# DISPLACEMENT of the r2 reference cohort measured in the SAME runs —
-# median 1.163 vs 0.970 (shift 1.20 ≈ 1/0.847 within 2%) with relative
-# IQR 0.241 vs the r2 cohort's 0.254: twenty heterogeneous plan shapes
-# (aggs, joins, text, windows) regressing independently by the SAME
-# magnitude with no widening of spread is not a plausible alternative;
-# (b) the r5 cohort, whose factor IS measured, lands at 1.01 normalized
-# — the method is confirmed where it can be cross-checked.  The residual
-# risk (a uniform regression hiding inside the fitted factor) is bounded
-# by flagging rows recorded in ESTIMATED_EPOCH_ROUNDS at a TIGHTER
-# threshold in tools_ratio_check.
-ESTIMATED_EPOCH_ROUNDS = frozenset({3, 4})
-
-
-def baseline_epoch_rounds(path: str | None = None) -> dict[str, int | None]:
-    """BASELINE.md rows → {query: recording round}, None when the row
-    carries an explicit measured ``cal=`` annotation (r7+) or is r2-era
-    (the 1.0 reference epoch).  Rows whose round is in
-    ESTIMATED_EPOCH_ROUNDS ride a fitted, not measured, epoch factor."""
-    import re
-
-    if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-    rounds: dict[str, int | None] = {}
-    for line in open(path):
-        m = re.match(
-            r"\|\s*(\w+)\s*\|\s*([0-9.]+)\s*\|\s*local\[32\], sf0\.1[^|]*\|([^|]*)\|",
-            line,
-        )
-        if not m:
-            continue
-        note = m.group(3)
-        if re.search(r"cal=([0-9.]+)", note):
-            rounds[m.group(1)] = None
-            continue
-        mr = re.search(r"(?:re-)?recorded r(\d+)", note)
-        rounds[m.group(1)] = int(mr.group(1)) if mr else None
-    return rounds
-
-
-def baseline_rows(path: str | None = None) -> dict[str, tuple[float, float]]:
-    """BASELINE.md rows → {query: (seconds, epoch_cal)} where epoch_cal
-    maps the row's recording epoch to the r2 scale: an explicit ``cal=``
-    in the annotation wins, else ROUND_EPOCH_CAL of the recorded round."""
-    import re
-
-    if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-    rows: dict[str, tuple[float, float]] = {}
-    for line in open(path):
-        m = re.match(
-            r"\|\s*(\w+)\s*\|\s*([0-9.]+)\s*\|\s*local\[32\], sf0\.1[^|]*\|([^|]*)\|",
-            line,
-        )
-        if not m:
-            continue
-        note = m.group(3)
-        mc = re.search(r"cal=([0-9.]+)", note)
-        if mc:
-            cal = float(mc.group(1))
-        else:
-            mr = re.search(r"(?:re-)?recorded r(\d+)", note)
-            cal = ROUND_EPOCH_CAL.get(int(mr.group(1)), 1.0) if mr else 1.0
-        rows[m.group(1)] = (float(m.group(2)), cal)
-    return rows
-
-
-def calibration_factor(
-    timings: dict[str, float], base: dict[str, tuple[float, float]]
-) -> float | None:
-    """Median sentinel ratio-to-baseline of one run — the host-speed
-    factor for that measurement window (None when the run does not cover
-    enough sentinels, e.g. protocol unit tests)."""
-    ratios = [
-        timings[q] / base[q][0] for q in SENTINELS if q in timings and q in base
-    ]
-    if len(ratios) < 3:
-        return None
-    return round(statistics.median(ratios), 4)
 # Streaming replays carry state-store open/commit + micro-batch scheduling
-# jitter (observed cross-run spreads up to 4x on stream_join_replay); a
-# median of 5 instead of 3 keeps one outlier batch from moving the
-# recorded number.
+# jitter (observed spreads up to 4x on stream_join_replay); a median of 5
+# instead of 3 keeps one outlier batch from moving the recorded number.
 STREAM_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_STREAM_REPEATS", "5"))
+BENCH_LOCAL = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
 
 
 def execute(df) -> None:
@@ -197,93 +42,19 @@ def execute(df) -> None:
 
 
 def release_pins(spark) -> None:
-    """Cold-honest protocol (r11 verdict item #2): ``lru_persist`` pins
-    survive across ``q.fn`` calls (same plan → same semanticHash → the
-    SAME persisted frame), so without this a timed run would reuse
-    subtrees materialized during the untimed warmup — measuring warm
-    cache, not the plan.  Dropping every pin plus the whole SQL cache
-    between the warmup and each timed run makes every timed execution
-    compute its pinned subtrees inside the timed region (the within-run
-    compute-once reuse across a plan's own consumers still counts — that
-    is the plan improvement, not cross-run caching)."""
+    """Cold-honest protocol: ``lru_persist`` pins survive across ``q.fn``
+    calls (same plan → same semanticHash → the SAME persisted frame), so
+    without this a timed run would reuse subtrees materialized during the
+    untimed warmup — measuring warm cache, not the plan.  Dropping every
+    pin plus the whole SQL cache between the warmup and each timed run
+    makes every timed execution compute its pinned subtrees inside the
+    timed region (the within-run compute-once reuse across a plan's own
+    consumers still counts — that is the plan improvement, not cross-run
+    caching)."""
     from my_cudf_spark.plans.pin import release_persisted
 
     release_persisted()
     spark.catalog.clearCache()
-
-
-RUNS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RUNS")
-HISTORY = int(os.environ.get("SPARK_GRAFT_BENCH_HISTORY", "5"))
-
-
-def _cross_run_medians(
-    timings: dict[str, float], sf_val, cpus: int
-) -> tuple[dict[str, float], int, dict[str, int], dict[str, float], float | None]:
-    """Snapshot this run under BENCH_RUNS/ and return (per-query medians
-    across the newest <= HISTORY runs at the same (sf, cpus), number of
-    runs merged, per-query backing-run counts, per-query NORMALIZED
-    medians, this run's calibration).  A query missing from older
-    snapshots (newly added) medians over the runs that have it.  The
-    normalized median divides each run's time by that run's own sentinel
-    calibration (stored in the snapshot; recomputed for pre-calibration
-    snapshots) — r2-epoch-equivalent seconds, host weather removed."""
-    base = baseline_rows()
-    cal = calibration_factor(timings, base)
-    snap = {
-        "ts": time.time(),
-        "sf": sf_val,
-        "cpus": cpus,
-        "queries": timings,
-        "calibration": cal,
-    }
-    fname = f"run-{int(snap['ts'])}-{os.getpid()}-{uuid.uuid4().hex[:8]}.json"
-    try:
-        os.makedirs(RUNS_DIR, exist_ok=True)
-        with open(os.path.join(RUNS_DIR, fname), "w") as f:
-            json.dump(snap, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except OSError as e:
-        print(f"# BENCH_RUNS snapshot not written: {e}", file=sys.stderr)
-    runs = [snap]
-    try:
-        candidates = []
-        for fn in os.listdir(RUNS_DIR):
-            if not fn.endswith(".json") or fn == fname:
-                continue
-            try:
-                with open(os.path.join(RUNS_DIR, fn)) as f:
-                    s = json.load(f)
-            except (OSError, ValueError):
-                continue
-            if s.get("sf") == sf_val and s.get("cpus") == cpus:
-                candidates.append(s)
-        candidates.sort(key=lambda s: s.get("ts", 0), reverse=True)
-        runs.extend(candidates[: HISTORY - 1])
-    except OSError:
-        pass
-    # Recompute each run's calibration from its RAW timings with the
-    # current sentinel basket (stored factors are kept for provenance but
-    # measure the basket of their day — recomputing keeps the whole
-    # history on one scale when the basket changes, e.g. the r8 text-row
-    # rebalance).  Stored value is the fallback for protocol-test runs
-    # with too few sentinels.
-    cals = [
-        calibration_factor(r.get("queries", {}), base) or r.get("calibration") or 1.0
-        for r in runs
-    ]
-    merged = {}
-    backing = {}
-    normalized = {}
-    for q in timings:
-        vals = [
-            (r["queries"][q], c)
-            for r, c in zip(runs, cals)
-            if q in r.get("queries", {})
-        ]
-        merged[q] = round(statistics.median(v for v, _ in vals), 4)
-        normalized[q] = round(statistics.median(v / c for v, c in vals), 4)
-        backing[q] = len(vals)
-    return merged, len(runs), backing, normalized, cal
 
 
 def main() -> None:
@@ -314,46 +85,25 @@ def main() -> None:
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    merged, runs_used, backing, normalized, cal = _cross_run_medians(
-        timings, sf_val, cpus
-    )
     result = {
         "metric": "total_query_sec",
-        "value": round(sum(merged.values()), 4),
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "queries": merged,
-        "sf": sf_val,
-        "protocol": "cross-run-median",
-        "runs_used": runs_used,
-        # per-query backing where it differs from runs_used (e.g. queries
-        # added after older snapshots) — a 1-run-backed median is visible
-        "runs_per_query": {q: n for q, n in backing.items() if n != runs_used},
-        "queries_this_run": timings,
-        # host-epoch calibration (see SENTINELS): this run's sentinel
-        # median ratio-to-baseline, and per-query cross-run medians in
-        # r2-epoch-equivalent seconds (each run divided by its own factor)
-        "calibration_this_run": cal,
-        "queries_normalized": normalized,
-        "value_normalized": round(sum(normalized.values()), 4),
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # Durable copy: stdout tail capture can truncate the head of the
-    # per-query dict, so every run also lands in BENCH_LOCAL.json
-    # (full result) for round-over-round diffing.
+    # per-query dict, so every run also lands in BENCH_LOCAL.json.
     try:
-        out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
-        with open(out, "w") as f:
+        with open(BENCH_LOCAL, "w") as f:
             json.dump(result, f, indent=1, sort_keys=True)
             f.write("\n")
     except OSError as e:
         print(f"# BENCH_LOCAL.json not written: {e}", file=sys.stderr)
     # Stop the session BEFORE emitting the contract line, then print it as
-    # the very last stdout write (r11 verdict item "What's wrong #2": the
-    # one-line JSON must be the final stdout line with nothing after it —
-    # a stray JVM/log line after the JSON made round 10's output
-    # unparseable and cost the driver its round-over-round baseline).
-    # A failing teardown is logged, never allowed to swallow that line.
+    # the very last stdout write: a stray JVM/log line after the JSON makes
+    # the output unparseable.  A failing teardown is logged, never allowed
+    # to swallow that line.
     try:
         spark.stop()
     except Exception:

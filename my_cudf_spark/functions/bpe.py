@@ -343,7 +343,17 @@ def learn_bpe_merges(
     Scale: per round, one map-side-combined pair-count shuffle (pair
     cardinality ~ vocab², small) + a 1-row broadcast + a narrow rewrite;
     peak cache is ``checkpoint_every`` corpus-sized frames.  Rounds are
-    sequential by nature of the algorithm."""
+    sequential by nature of the algorithm.
+
+    Fault tolerance: every truncation (the per-round lazy one and the
+    ``checkpoint_every`` eager ones) is a ``localCheckpoint``, whose blocks
+    live only in executor storage with the lineage cut.  Losing an executor
+    after a checkpoint therefore fails the job instead of recomputing the
+    lost blocks; a cluster run that must survive executor loss needs
+    reliable ``checkpoint()`` under ``sc.setCheckpointDir``.  The call also
+    does not free superseded checkpoint blocks (``_release`` unpersists only
+    its own persists): they stay in storage until Spark's ContextCleaner
+    collects the unreferenced RDDs."""
     from pyspark.sql import DataFrame  # local: avoid cycle at import time
     from pyspark.storagelevel import StorageLevel
 

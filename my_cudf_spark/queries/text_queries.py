@@ -116,10 +116,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring (length/alpha/word-length heuristics) + stopword-ratio
     language signal (north star text analysis)."""
-    # SENTINEL PROBE (bench.SENTINELS): plan pinned to the r2 single-split
-    # scan — parallelize=False — so its baseline stays a valid host-speed
-    # reference and the basket keeps a single-core-profile component.
-    docs = _with_tokens(load_table(spark, sf_dir, "documents", parallelize=False))
+    docs = _with_tokens(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         T.quality_score("text").alias("quality"),
@@ -1283,8 +1280,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size and the per-term df dim — no all-pairs, no collect; the
     df table is |vocab|-sized (bounded, Zipf-concentrated) so its join
     broadcast-sizes at any corpus scale."""
-    # SENTINEL PROBE (bench.SENTINELS): plan pinned — see text_quality_lang.
-    docs = _with_tokens(load_table(spark, sf_dir, "documents", parallelize=False))
+    docs = _with_tokens(load_table(spark, sf_dir, "documents"))
     t = docs.select("doc_id", F.explode("toks").alias("token"))
     tc = t.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
     dl = t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1345,8 +1341,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + two hash aggregations, linear in corpus size).  These are
     the standard pre-training repetition filters (e.g. Gopher table A1);
     the reference's nvtext surface stops at n-gram generation."""
-    # SENTINEL PROBE (bench.SENTINELS): plan pinned — see text_quality_lang.
-    docs = load_table(spark, sf_dir, "documents", parallelize=False).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.trim(F.col("text")), " ").alias("l")
     )
     ex = docs.select(

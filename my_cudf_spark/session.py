@@ -69,11 +69,11 @@ _CONFIGURED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 # The plan-affecting profile confs re-read per memoized call (three py4j
 # round trips vs the full ~10-set pass): if an external driver mutated one
-# of them between queries, the sentinel check notices and the full pass
+# of them between queries, the probe check notices and the full pass
 # re-applies.  Repo-internal temporary overrides (the streaming drain's
 # shuffle partitions) touch only confs OUTSIDE this profile and restore
 # themselves in ``finally``.
-_SENTINEL_CONFS = (
+_PROBE_CONFS = (
     "spark.sql.session.timeZone",
     "spark.sql.adaptive.enabled",
     "spark.sql.autoBroadcastJoinThreshold",
@@ -82,12 +82,12 @@ _SENTINEL_CONFS = (
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Best-effort apply of runtime-settable confs to an existing session
-    (idempotent and memoized per live session object; a sentinel read of
+    (idempotent and memoized per live session object; a probe read of
     the plan-affecting confs detects external mutation and triggers a full
     re-apply)."""
     if spark in _CONFIGURED_SESSIONS:
         try:
-            if all(spark.conf.get(k) == RUNTIME_CONFS[k] for k in _SENTINEL_CONFS):
+            if all(spark.conf.get(k) == RUNTIME_CONFS[k] for k in _PROBE_CONFS):
                 return spark
         except Exception:
             return spark

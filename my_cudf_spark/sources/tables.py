@@ -103,10 +103,9 @@ def load_table(
 ) -> DataFrame:
     """Load one fixture table, normalizing schema quirks.
 
-    ``parallelize=False`` pins the raw scan plan for measurement probes:
-    the three text bench SENTINELS keep their never-re-planned single-
-    split scans so their r2 baselines stay valid reference points AND the
-    calibration basket retains a single-core-profile component."""
+    ``parallelize=False`` keeps the raw scan plan (no small-source
+    round-robin): replay staging (``streaming.sources.replay_table``)
+    chunks the scan in its stored split layout and is its only caller."""
     apply_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)

@@ -115,12 +115,13 @@ def dedup(
     return df.dropDuplicates(list(keys))
 
 
-# Measurement hook (guide §1, r11 verdict item #4 — decompose the
-# micro-batch floor): when ``collect_progress`` is flipped on (profiling
-# tools only; bench/queries never touch it), every drain appends its
-# per-micro-batch StreamingQueryProgress dicts (durationMs breakdown:
-# triggerExecution, queryPlanning, addBatch, getBatch, walCommit,
-# commitOffsets, latestOffset) to ``last_progress``.
+# Measurement hook (decomposes the micro-batch floor): when
+# ``collect_progress`` is on — ``tools_profile.py`` and a traced
+# ``perfbench/run.py`` set it; ``bench.py`` and the queries never do —
+# every drain appends its per-micro-batch StreamingQueryProgress dicts
+# (durationMs breakdown: triggerExecution, queryPlanning, addBatch,
+# getBatch, walCommit, commitOffsets, latestOffset; stateOperators) to
+# ``last_progress``.
 collect_progress = False
 last_progress: list[dict] = []
 
@@ -135,7 +136,9 @@ def run_to_memory(
     ``output_mode`` defaults to complete for aggregations, append otherwise;
     pass ``"update"`` explicitly for flatMapGroupsWithState-style operators
     (the memory sink then accumulates one row per state update — callers
-    keep the latest per key, e.g. via ``max_by``).
+    fold those rows per key: ``max_by`` over a version or count column,
+    ``row_number`` over a window, or ``bool_and`` over per-batch
+    verdicts).
     """
     if output_mode is None:
         output_mode = "complete" if _has_aggregate(stream_df) else "append"

@@ -598,7 +598,7 @@ def test_small_source_parallelism_guard(spark):
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)" in plan, plan
     assert "ReadSchema: struct<doc_id:bigint>" in plan, plan
 
-    # Sentinel probes opt out: their plan stays the raw single-split scan.
+    # Replay staging opts out: its plan stays the raw single-split scan.
     pinned = load_table(spark, SF_DIR, "documents", parallelize=False)
     assert "Exchange" not in P.physical_plan(pinned)
 

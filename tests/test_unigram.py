@@ -131,3 +131,35 @@ def test_unigram_segment_stats_consistency(spark):
     assert 3 <= out[0]["n_pieces"] <= sum(len(w) for w in texts[0][1].split())
     # score is a genuine negative log-prob sum
     assert out[0]["score"] < 0 and out[3]["score"] == 0
+
+
+def test_m_counts_union_equals_left_join(spark, monkeypatch):
+    # _m_counts smooths single chars with a union + sum instead of the
+    # former ``chars LEFT JOIN counts``; the two agree only because every
+    # single-char piece of an E-step count is in ``chars``.  Check that
+    # premise, and the equality, on every M-step of a real training run.
+    from my_cudf_spark.functions import text as T
+    from my_cudf_spark.functions import unigram as U
+    from my_cudf_spark.sources import load_table
+    from tests.conftest import SF_DIR
+
+    steps = []
+    m_counts = U._m_counts
+
+    def recording(counts, chars):
+        steps.append((counts, chars))
+        return m_counts(counts, chars)
+
+    monkeypatch.setattr(U, "_m_counts", recording)
+    docs = load_table(spark, SF_DIR, "documents").filter(F.col("text").isNotNull())
+    U.train_unigram_counts(docs.select(T.normalize_text("text").alias("norm")), "norm")
+
+    assert len(steps) == 2
+    for counts, chars in steps:
+        c = dict(counts.collect())
+        charset = {r.piece for r in chars.collect()}
+        singles = {p for p in c if len(p) == 1}
+        assert singles and singles <= charset, singles - charset
+        want = {p: n for p, n in c.items() if len(p) > 1 and n > 0}
+        want.update({ch: c.get(ch, 0) + 1 for ch in charset})  # left join
+        assert dict(m_counts(counts, chars).collect()) == want

@@ -31,8 +31,9 @@ convention (query fn + noop sink, full execution, no collect), repeats
 with the per-scale MIN reported (contention only ever inflates).
 
 Usage: python tools_scale_check.py [--repeats 2] [--out SCALE_CHECK.json]
-Run serially — never concurrent with bench.py or pytest (numbers
-inflate 1.5-2.5× under a shared host, the BENCH_RUNS lesson).
+Run serially — never concurrent with bench.py or pytest: contention on
+a shared host inflates a whole session's numbers 1.5-2.5×, and repeats
+within one session cannot see it.
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ import json
 import math
 import os
 import time
+
+from my_cudf_spark.sources.tables import DEFAULT_SF_DIR
 
 SCALES = [1, 4, 16]
 QUERIES = [
@@ -58,7 +61,7 @@ QUERIES = [
     "stream_ann_ivfpq_residual_replay",
     "stream_decontam_replay",
 ]
-BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+BASE = DEFAULT_SF_DIR
 OUT_ROOT = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scale_corpora")
 OTHER_TABLES = [
     "region", "nation", "customer", "supplier", "part",
